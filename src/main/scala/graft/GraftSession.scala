@@ -18,42 +18,27 @@ object GraftSession {
   def cluster(numExecutors: Int, coresPerExecutor: Int, memMb: Int,
       appName: String = "graft"): SparkSession = {
     val appCp = getClass.getProtectionDomain.getCodeSource.getLocation.getPath
-    val spark = SparkSession
-      .builder()
+    ready(engineDefaults(SparkSession.builder(), numExecutors * coresPerExecutor)
       .master(s"local-cluster[$numExecutors,$coresPerExecutor,$memMb]")
       .appName(appName)
       .config("spark.executor.memory", s"${memMb}m")
       .config("spark.executor.extraClassPath", appCp)
-      .config("spark.sql.shuffle.partitions", (numExecutors * coresPerExecutor).toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // same join-strategy stance as local() — see the comment there
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark
+      .getOrCreate())
   }
 
-  /** Parquet codec for everything this engine writes. Overridable via
-    * `SPARK_GRAFT_PARQUET_CODEC` (snappy | zstd | lz4 | gzip |
-    * uncompressed) — the write stage dominates CDC replay (per-rep stage
-    * decomposition: sink_write ≈ 80 % of addBatch), so codec choice is a
-    * first-order deployment knob: cheaper codecs buy replay throughput,
-    * heavier ones buy storage.
-    */
-  private def parquetCodec: Option[String] = sys.env.get("SPARK_GRAFT_PARQUET_CODEC")
-
-  def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val builder0 = SparkSession
-      .builder()
+  def local(cores: Int, appName: String = "graft"): SparkSession =
+    ready(engineDefaults(SparkSession.builder(), cores)
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      )
+      .getOrCreate())
+
+  /** The settings both factories share. */
+  private def engineDefaults(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
+    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -66,17 +51,8 @@ object GraftSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      )
-      // pairs with the sink's SPARK_GRAFT_SINK_NOSORT A/B: concurrent
-      // dynamic-partition writers make the pre-write sort skippable
-      .config("spark.sql.maxConcurrentOutputFileWriters",
-        if (sys.env.get("SPARK_GRAFT_SINK_NOSORT").contains("1")) "128" else "0")
-    val spark = parquetCodec
-      .fold(builder0)(c => builder0.config("spark.sql.parquet.compression.codec", c))
-      .getOrCreate()
+
+  private def ready(spark: SparkSession): SparkSession = {
     spark.sparkContext.setLogLevel("WARN")
     // getOrCreate may return a pre-existing session built without the
     // extensions config — the imperative path is idempotent either way

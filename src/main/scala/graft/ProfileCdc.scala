@@ -43,7 +43,7 @@ object ProfileCdc {
     time("routed + unpartitioned parquet write") {
       CdcPipeline.routed(df).write.mode("overwrite").parquet("/tmp/prof-flat")
     }
-    time("processBatch (cached route+range write+lineage, pipeline path)") {
+    time("processBatch (lineage aggregate + count-ranged write, pipeline path)") {
       val sink = new ExactlyOnceSink(spark, "/tmp/prof-sink-" + System.nanoTime())
       CdcPipeline.processBatch(sink, df, 0L)
     }

@@ -375,6 +375,11 @@ object HashingKernels {
     UTF8String.fromString(sb.toString)
   }
 
+  /** Most MinHash rows per document: ring hash h < 2^31 and multiplier
+    * a = 2k+1 < 2^16 keep h·a + b below 2^48, inside a signed long.
+    */
+  val MaxMinhashRows = 1 << 15
+
   /** MinHash LSH band keys in ONE pass per document (r7b): the
     * `minhashSignatures` → band-slice → `xxhash64(slice)` pipeline
     * collapsed into a narrow kernel. Replicates the expression algebra
@@ -395,6 +400,8 @@ object HashingKernels {
     */
   def minhashBandKeys(text: UTF8String, n: Int, bands: Int,
       rowsPerBand: Int): ArrayData = {
+    require(bands.toLong * rowsPerBand <= MaxMinhashRows,
+      s"minhash_band_keys: bands*rowsPerBand exceeds $MaxMinhashRows")
     val p = 2147483647L // 2^31 - 1
     val numHashes = bands * rowsPerBand
     val w = text.toString.split(" ", -1)
@@ -669,7 +676,8 @@ case class RemoveSpans(left: Expression, right: Expression, k: Int)
   */
 case class MinhashBandKeys(child: Expression, n: Int, bands: Int,
     rowsPerBand: Int) extends UnaryExpression {
-  require(n >= 1 && bands >= 1 && rowsPerBand >= 1, "minhash_band_keys: bad params")
+  require(n >= 1 && bands >= 1 && rowsPerBand >= 1 &&
+    bands.toLong * rowsPerBand <= HashingKernels.MaxMinhashRows, "minhash_band_keys: bad params")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_band_keys"
   override protected def nullSafeEval(input: Any): Any =

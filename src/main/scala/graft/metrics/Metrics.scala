@@ -126,8 +126,8 @@ object StageTimers {
 /** Per-event source-latency monitor (≙ reference
   * monitoring/CDCMonitor.scala:28-30: warn when now − source.ts_ms exceeds
   * 10 s). The reference logs per event from inside the data plane; here the
-  * check is ONE aggregate over the already-cached micro-batch (max / avg
-  * latency + late-event count), so the hot path stays codegen'd and the
+  * check is part of the one lineage aggregate over each micro-batch (max /
+  * avg latency + late-event count), so the hot path stays codegen'd and the
   * alert cost is independent of batch size.
   */
 object LatencyMonitor {

@@ -17,52 +17,36 @@ import graft.source.ChangeStreamReader
   * source → CDCEventProcessor → side outputs + per-table sinks,
   * reference main.scala:344-495) with the structural fixes of §4.3: one
   * parse, one routing pass, one sink write per batch. Spark has no side
-  * outputs, so the micro-batch is cached once and filtered three ways inside
-  * foreachBatch — each filter is a narrow, codegen'd pass over the cached
-  * batch.
+  * outputs, so the route is a partition column of that one write, and
+  * each committed route is a partition-pruned read.
   */
 object CdcPipeline {
 
-  /** Route + write one micro-batch, exactly once, in ONE pass: routing,
-    * enrichment and time-bucketing are columns; the route is a partition
-    * column (Spark's stand-in for the reference's side outputs); a single
-    * shuffle on the partition key bounds output file count by populated
-    * buckets, not by cores. Calling it twice with the same batchId is a
-    * no-op the second time (idempotent replay).
+  /** Route + write one micro-batch, exactly once: routing, enrichment and
+    * time-bucketing are columns; the route is a partition column (Spark's
+    * stand-in for the reference's side outputs). Count first, then write:
+    * ONE aggregate computes the commit lineage and the source-latency stats
+    * (reference CDCMonitor's 10 s warn), then its exact counts lay out the
+    * sink's single shuffle. Both passes read the routed rows computed once
+    * (`ExactlyOnceSink.computedOnce`). A replayed batchId is a no-op.
     */
   def processBatch(sink: ExactlyOnceSink, batch: DataFrame, batchId: Long,
       tables: Seq[String] = Nil): Unit = {
     if (sink.isCommitted(batchId)) return
-    // Persist the routed micro-batch (size bounded by maxFilesPerTrigger):
-    // the range-partitioner's sampling pass, the real shuffle, and the
-    // lineage aggregation then all read the cache — the parquet scan +
-    // enrichment run exactly once per batch.
-    val keyed = tableFiltered(routed(batch), tables).persist()
-    try {
-      var t0 = System.nanoTime()
-      sink.writeBatch(batchId, keyed)
-      graft.metrics.StageTimers.addWrite(sink.outDir, System.nanoTime() - t0)
-      // ONE aggregate computes both the commit lineage and the per-batch
-      // source-latency stats (reference CDCMonitor's 10 s warn) — merging
-      // them saves a full pass over the cached batch per micro-batch
+    ExactlyOnceSink.computedOnce(tableFiltered(routed(batch), tables)) { keyed =>
       val alertMs = sys.props.get("graft.latencyAlertMs").map(_.toLong)
         .getOrElse(graft.metrics.LatencyMonitor.DefaultAlertMs)
       val nowMs = System.currentTimeMillis()
-      t0 = System.nanoTime()
+      var t0 = System.nanoTime()
       val lat = lit(nowMs) - col("source.ts_ms")
-      val rows = keyed
-        .groupBy(concat_ws("/", col("route"), col("src_table"), col("p_date")).as("part"))
-        .agg(count(lit(1)).as("rows"),
-          coalesce(min(col("source.lsn")), lit(-1L)).as("minLsn"),
-          coalesce(max(col("source.lsn")), lit(-1L)).as("maxLsn"),
-          coalesce(max(lat), lit(0L)).as("maxLat"),
-          coalesce(sum(lat), lit(0L)).as("sumLat"),
-          count(when(lat > alertMs, 1)).as("late"),
-          count(col("source.ts_ms")).as("latN"))
-        .collect()
+      val rows = ExactlyOnceSink.lineageRows(keyed, col("source.lsn"),
+        coalesce(max(lat), lit(0L)), coalesce(sum(lat), lit(0L)),
+        count(when(lat > alertMs, 1)), count(col("source.ts_ms")))
       graft.metrics.StageTimers.addLineage(sink.outDir, System.nanoTime() - t0)
-      val lineage = rows.map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      val lineage = ExactlyOnceSink.lineage(rows)
+      t0 = System.nanoTime()
+      sink.writeBatch(batchId, keyed, lineage.map(l => l._1 -> l._2).toMap)
+      graft.metrics.StageTimers.addWrite(sink.outDir, System.nanoTime() - t0)
       if (alertMs > 0 && rows.nonEmpty) {
         val latN = rows.map(_.getLong(7)).sum
         graft.metrics.LatencyMonitor.record(
@@ -78,7 +62,7 @@ object CdcPipeline {
       sink.commit(batchId, lineage)
       graft.metrics.StageTimers.addCommit(sink.outDir, System.nanoTime() - t0)
       graft.metrics.StageTimers.batchDone(sink.outDir)
-    } finally { keyed.unpersist(); () }
+    }
   }
 
   /** The single-pass route + enrich + time-bucket projection. The final

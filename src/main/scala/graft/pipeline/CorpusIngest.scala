@@ -150,18 +150,13 @@ object CorpusIngest {
               nearStage(batch.persist(), idx, t, nearMaxGramDf)
             case _ => batch
           }
-          val env = envelope(near, ingestDate).persist()
-          try {
-            sink.writeBatch(batchId, env)
-            val lineage = env.groupBy(col("route"), col("src_table"), col("p_date"))
-              .agg(count(lit(1)).as("rows"),
-                min(col("doc_id")).as("minLsn"), max(col("doc_id")).as("maxLsn"))
-              .collect()
-              .map(r => (s"${r.getString(0)}/${r.getString(1)}/${r.getDate(2)}",
-                r.getLong(3), r.getLong(4), r.getLong(5)))
-              .toSeq
+          // lineage first, then the count-ranged write, over the envelope
+          // computed once (the dedup state commits once per batch)
+          try ExactlyOnceSink.computedOnce(envelope(near, ingestDate)) { env =>
+            val lineage = ExactlyOnceSink.lineage(ExactlyOnceSink.lineageRows(env, col("doc_id")))
+            sink.writeBatch(batchId, env, lineage.map(l => l._1 -> l._2).toMap)
             sink.commit(batchId, lineage)
-          } finally { env.unpersist(); batch.unpersist(); () }
+          } finally { batch.unpersist(); () }
         }
       }
       .start()

@@ -1,8 +1,12 @@
 package graft.sink
 
+import scala.collection.immutable.ListMap
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Idempotent exactly-once file sink with per-partition commit lineage
   * (SURVEY.md §7.4).
@@ -29,16 +33,17 @@ import org.apache.spark.sql.functions._
   * pruned by parquet min/max stats, Iceberg-style, because long-running
   * conversations make hourly dir cardinality explode (measured: a months-
   * spanning hot conversation turned one batch into thousands of tiny files
-  * and a 48 s write). The batch is repartitioned on (partition cols +
-  * salt) before writing: write parallelism = buckets × salt, file count
-  * stays bounded and independent of input size. The naive alternative
-  * (3 filtered writes, tasks × dirs files) made 32 cores SLOWER than 8.
+  * and a 48 s write). The naive alternative (3 filtered writes, tasks ×
+  * dirs files) made 32 cores SLOWER than 8.
   *
-  * The manifest carries per-(route, time-bucket) lineage: row counts and
-  * [minLsn, maxLsn] — the per-partition offset lineage the north rule
-  * requires. The pipeline computes it from the CACHED routed batch in the
-  * same aggregate as the latency stats (CdcPipeline.processBatch) — one
-  * pass, no re-read of the written files — and publishes it via `commit`.
+  * Count first, then commit (the order of Flink's two-phase-commit sink):
+  * the writer computes the per-(route, table, date) lineage — row counts
+  * and [minLsn, maxLsn], the per-partition offset lineage the north rule
+  * requires — in ONE aggregate straight off its input, before the write.
+  * The exact counts lay out the write's partition slots (`slotted`), and
+  * the same lineage is published by `commit`; the written files are never
+  * re-read. Both passes read the batch's rows computed once
+  * (`computedOnce`).
   */
 final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     maxRecordsPerFile: Long = 0L,
@@ -173,35 +178,16 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
   }
 
   /** Single-pass write of a routed, time-bucketed batch. `df` must carry
-    * `route`, `p_date`, `p_hour` columns.
-    *
-    * The pre-write shuffle key is (partition cols + salt): without the salt,
-    * write parallelism is capped at the number of populated time buckets
-    * (measured: 32 cores idled behind ~12 hourly buckets); with it, each
-    * bucket fans out over `salt` writers, and file count stays
-    * buckets × salt — still independent of input size.
+    * `route`, `src_table`, `p_date`; `counts` is its exact row count per
+    * `partKey` value — the row counts of the batch's commit lineage.
     */
-  def writeBatch(batchId: Long, df: DataFrame): Unit =
-    writeDir(batchDir(batchId), df)
+  def writeBatch(batchId: Long, df: DataFrame, counts: Map[String, Long]): Unit =
+    writeDir(batchDir(batchId), df, counts)
 
-  private def writeDir(dir: String, df: DataFrame): Unit = {
-    // RANGE partition on (route, p_date, salt): task load is volume-
-    // proportional (a hot date spans several consecutive tasks, light dates
-    // share one), parallelism is 2×cores regardless of bucket skew, and
-    // file count ≈ tasks + dates — hash salting instead multiplies files by
-    // salt × dates (measured: 2,900 files/batch on a 70-day batch).
-    val parts = math.max(2, 2 * spark.sparkContext.defaultParallelism)
-    val ranged = df.withColumn("w_salt", pmod(xxhash64(col("ts_ms")), lit(parts)))
-      .repartitionByRange(parts, col("route"), col("src_table"), col("p_date"), col("w_salt"))
-      .drop("w_salt")
-    // the within-task sort exists so the dynamic-partition writer holds ONE
-    // open file at a time; spark.sql.maxConcurrentOutputFileWriters trades
-    // writer memory for skipping that sort — A/B'd via this env knob
-    // (BENCH/BASELINE.md records the measurement; sort remains the default)
-    val staged =
-      if (sys.env.get("SPARK_GRAFT_SINK_NOSORT").contains("1")) ranged
-      else ranged.sortWithinPartitions("route", "src_table", "p_date")
-    staged.write.mode("overwrite")
+  private def writeDir(dir: String, df: DataFrame, counts: Map[String, Long]): Unit =
+    slotted(df, counts)
+      .sortWithinPartitions("route", "src_table", "p_date")
+      .write.mode("overwrite")
       // rolling on the committed files (0 = unlimited — Spark's own
       // convention for spark.sql.files.maxRecordsPerFile); ≙ reference
       // rolling policy S3Sink.scala:116-120: the explicit record cap and/or
@@ -209,6 +195,28 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
       .option("maxRecordsPerFile", effectiveMaxRecords)
       .partitionBy("route", "src_table", "p_date")
       .parquet(dir)
+
+  /** The pre-write shuffle: exact range partitioning from exact counts
+    * (`cellRanges`), 2×cores slots whatever the key skew. Task load is
+    * volume-proportional and files ≤ slots + keys (hash salting instead
+    * multiplies files by salt × dates — measured: 2,900 files/batch on a
+    * 70-day batch). The within-task sort (in `writeDir`) lets the writer
+    * hold ONE open file at a time. A row whose key is missing from
+    * `counts` fails the write.
+    */
+  private[graft] def slotted(df: DataFrame, counts: Map[String, Long]): DataFrame = {
+    val parts = math.max(2, 2 * spark.sparkContext.defaultParallelism)
+    // (first cell << 32 | width), hottest keys first: a map lookup scans
+    // its entries in order
+    val packed = ListMap(ExactlyOnceSink.cellRanges(counts, parts).toSeq
+      .sortBy(kv => -counts(kv._1))
+      .map { case (k, (first, width)) => k -> (first.toLong << 32 | width) }: _*)
+    val key = ExactlyOnceSink.partKey
+    val range = coalesce(element_at(typedlit(packed), key),
+      raise_error(concat(lit("sink write: partition key '"), key,
+        lit("' is missing from the batch counts"))))
+    val cell = shiftright(range, 32) + pmod(xxhash64(col("ts_ms")), range.bitwiseAND(0xffffffffL))
+    df.repartitionById(parts, shiftright(cell, ExactlyOnceSink.CellBits).cast("int"))
   }
 
   /** Atomically publish the batch (rename makes the commit visible). */
@@ -250,26 +258,27 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     asOfBatch.foreach(a => require(floor.forall(a >= _),
       s"asOfBatch=$a predates the compaction epoch ${floor.get} — that history was compacted away"))
     val ids = asOfBatch.fold(committedBatchIds)(b => committedBatchIds.filter(_ <= b))
-    val dirs = (floor.map(compactDir).toSeq ++ ids.map(batchDir))
-      .filter(d => fs.exists(new Path(d)))
-    if (dirs.isEmpty) None
-    else {
-      // the `batch` partition-discovery column is internal dir naming
-      // (compaction renames it) — never part of the committed content
-      try {
-        val df = spark.read.option("basePath", s"$outDir/events").parquet(dirs: _*)
-          .where(col("route") === route).drop("batch")
-        Some(table.fold(df)(t => df.where(col("src_table") === t)))
-      } catch {
-        // every committed batch is EMPTY (legal: a stream whose batches
-        // were fully filtered commits dirs with no part files, so parquet
-        // has nothing to infer a schema from) — committed content is
-        // genuinely absent, which is exactly what None means. Matched on
-        // the error CONDITION, not the message text, which is
-        // Spark-version-dependent phrasing.
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) => None
-      }
+    readDirs(floor.map(compactDir).toSeq ++ ids.map(batchDir)).map { df =>
+      val routeDf = df.where(col("route") === route)
+      table.fold(routeDf)(t => routeDf.where(col("src_table") === t))
+    }
+  }
+
+  /** The events under those of `dirs` that exist; None when there are
+    * none, or no part files to infer a schema from (legal: a stream whose
+    * batches were all fully filtered commits dirs with no part files —
+    * content genuinely absent). Matched on the error CONDITION, not the
+    * message text, which is Spark-version-dependent phrasing. The `batch`
+    * partition-discovery column is internal dir naming (compaction renames
+    * it) — never part of the content.
+    */
+  private def readDirs(dirs: Seq[String]): Option[DataFrame] = {
+    val live = dirs.filter(d => fs.exists(new Path(d)))
+    if (live.isEmpty) None
+    else try Some(spark.read.option("basePath", s"$outDir/events").parquet(live: _*).drop("batch"))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) => None
     }
   }
 
@@ -342,48 +351,27 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     val eligible = committedBatchIds.filter(_ <= upToBatch)
     require(eligible.nonEmpty, "compact: no live batches at or below upToBatch")
     val c = eligible.max
-    val srcDirs = (floor.map(compactDir).toSeq ++ eligible.map(batchDir))
-      .filter(d => fs.exists(new Path(d)))
     val staging = s"$outDir/events/.staging-compact-$c"
     fs.delete(new Path(staging), true)
-    // an ALL-EMPTY live history (every batch fully filtered) has no part
-    // files to infer a schema from — the epoch still flips (bounding the
-    // manifest) with an empty snapshot dir and empty lineage
-    val src = try {
-      Some(spark.read.option("basePath", s"$outDir/events").parquet(srcDirs: _*)
-        .drop("batch")) // partition-discovery column of the source dirs
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(_.startsWith("UNABLE_TO_INFER_SCHEMA")) => None
-    }
-    src match {
-      case Some(df) => writeDir(staging, df)
-      case None => fs.mkdirs(new Path(staging)); ()
+    // ONE aggregate over the source gives the slot counts and the epoch
+    // lineage. lsn: the CDC envelope's source.lsn; the corpus-ingest
+    // envelope's `source` is a string and its lsn is ts_ms (= doc_id). An
+    // ALL-EMPTY live history still flips the epoch (bounding the manifest)
+    // with an empty snapshot dir and empty lineage.
+    val lineage = readDirs(floor.map(compactDir).toSeq ++ eligible.map(batchDir)) match {
+      case Some(df) =>
+        val cdc = df.schema.find(_.name == "source")
+          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
+        val l = ExactlyOnceSink.lineage(
+          ExactlyOnceSink.lineageRows(df, if (cdc) col("source.lsn") else col("ts_ms")))
+        writeDir(staging, df, l.map(r => r._1 -> r._2).toMap)
+        l
+      case None => fs.mkdirs(new Path(staging)); Seq.empty
     }
     val dst = new Path(compactDir(c))
     fs.delete(dst, true) // orphan from a crashed earlier attempt at the same c
     if (!fs.rename(new Path(staging), dst))
       throw new java.io.IOException(s"compaction rename failed for epoch $c")
-    // aggregated lineage of the compacted snapshot (same shape as commit).
-    // The lsn column depends on the envelope: CDC events carry source.lsn;
-    // the corpus-ingest envelope's logical lsn is ts_ms (= doc_id)
-    val lineage = if (src.isEmpty) Seq.empty else {
-      val snap = spark.read.option("basePath", compactDir(c)).parquet(compactDir(c))
-      // "source" must be the CDC envelope STRUCT — the ingest envelope has
-      // a plain string column of the same name (the document's source)
-      val lsn = snap.schema.find(_.name == "source") match {
-        case Some(f) if f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-          col("source.lsn")
-        case _ => col("ts_ms")
-      }
-      snap
-        .groupBy(concat_ws("/", col("route"), col("src_table"), col("p_date")).as("part"))
-        .agg(count(lit(1)).as("rows"),
-          coalesce(min(lsn), lit(-1L)).as("minLsn"),
-          coalesce(max(lsn), lit(-1L)).as("maxLsn"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    }
     val tmp = new Path(f"$outDir/_manifest/.tmp-epoch-$c%09d.json")
     val marker = new Path(f"$outDir/_manifest/epoch-$c%09d.json")
     val body = lineage.map { case (part, rows, minLsn, maxLsn) =>
@@ -401,36 +389,74 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     // already invisible for a full epoch cycle (id ≤ previous floor) are
     // physically deleted now. Manifest/visibility logic never sees the
     // stale files: committedBatchIds and readManifest filter by the floor.
+    def sweep(glob: String, name: scala.util.matching.Regex, dead: Long => Boolean): Unit =
+      fs.globStatus(new Path(s"$outDir/$glob")).foreach { st =>
+        st.getPath.getName match {
+          case name(id) if dead(id.toLong) => fs.delete(st.getPath, true)
+          case _ =>
+        }
+      }
     floor.foreach { p =>
-      val dirName = """batch=(\d+)""".r
-      fs.globStatus(new Path(s"$outDir/events/batch=*")).foreach { st =>
-        st.getPath.getName match {
-          case dirName(id) if id.toLong <= p => fs.delete(st.getPath, true)
-          case _ =>
-        }
-      }
-      val mName = """batch-(\d+)\.json""".r
-      fs.globStatus(new Path(s"$outDir/_manifest/batch-*.json")).foreach { st =>
-        st.getPath.getName match {
-          case mName(id) if id.toLong <= p => fs.delete(st.getPath, false)
-          case _ =>
-        }
-      }
-      val cName = """batch=(\d+)-compact""".r
-      fs.globStatus(new Path(s"$outDir/events/batch=*-compact")).foreach { st =>
-        st.getPath.getName match {
-          case cName(q) if q.toLong < p => fs.delete(st.getPath, true)
-          case _ =>
-        }
-      }
-      val eName = """epoch-(\d+)\.json""".r
-      fs.globStatus(new Path(s"$outDir/_manifest/epoch-*.json")).foreach { st =>
-        st.getPath.getName match {
-          case eName(q) if q.toLong < p => fs.delete(st.getPath, false)
-          case _ =>
-        }
-      }
+      sweep("events/batch=*", """batch=(\d+)""".r, _ <= p)
+      sweep("_manifest/batch-*.json", """batch-(\d+)\.json""".r, _ <= p)
+      sweep("events/batch=*-compact", """batch=(\d+)-compact""".r, _ < p)
+      sweep("_manifest/epoch-*.json", """epoch-(\d+)\.json""".r, _ < p)
     }
     c
+  }
+}
+
+object ExactlyOnceSink {
+
+  /** Runs `f` over `df`'s rows computed ONCE and kept in the block manager
+    * as rows (lost blocks recompute from lineage), then frees them. A sink
+    * writer reads its batch twice, but a streaming micro-batch's plan must
+    * run once: Spark's progress counts input rows, and a stateful plan
+    * commits state, per execution. Rows cost a copy; `Dataset.persist`'s
+    * columnar cache cost 2–3 s above the scan on a 1.56M-event batch.
+    */
+  def computedOnce[A](df: DataFrame)(f: DataFrame => A): A = {
+    val rows = df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    try f(GraftSqlBridge.dataFrame(df.sparkSession, rows, df.schema))
+    finally { rows.unpersist(); () }
+  }
+
+  /** The lineage / slot key of a row: `route/src_table/p_date`. */
+  def partKey: Column = concat_ws("/", col("route"), col("src_table"), col("p_date"))
+
+  /** ONE aggregate per `partKey`: rows of (part, rows, minLsn, maxLsn,
+    * `extra`…). */
+  def lineageRows(df: DataFrame, lsn: Column, extra: Column*): Array[Row] =
+    df.groupBy(partKey.as("part"))
+      .agg(count(lit(1)), coalesce(min(lsn), lit(-1L)) +: coalesce(max(lsn), lit(-1L)) +: extra: _*)
+      .collect()
+
+  /** The commit lineage (part, rows, minLsn, maxLsn) of `lineageRows`. */
+  def lineage(rows: Array[Row]): Seq[(String, Long, Long, Long)] =
+    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+  /** Cells per write slot, as a power of two: a slot takes from a hot key
+    * the share of the key's range it covers. Spreading a key evenly over
+    * whole slots overloads those it shares with neighbour keys (largest
+    * task 1.77× the even share on a zipf-1.1 test batch; 1.05× with cells).
+    */
+  val CellBits = 10
+
+  /** Exact range layout: keys in sorted order, key k covering the
+    * cumulative row range [c, c+n) and cell i of `parts << CellBits` the
+    * rows [i·total/cells, (i+1)·total/cells). A key gets every cell its
+    * range touches, as (first cell, width); cell i is slot `i >> CellBits`.
+    */
+  def cellRanges(counts: Map[String, Long], parts: Int): Map[String, (Int, Int)] = {
+    val live = counts.filter(_._2 > 0).toSeq.sortBy(_._1)
+    val total = BigInt(live.map(_._2).sum)
+    val cells = BigInt(parts) << CellBits
+    var c = BigInt(0)
+    live.map { case (k, n) =>
+      val first = (c * cells / total).toInt
+      val last = ((c + n - 1) * cells / total).toInt
+      c += n
+      k -> ((first, last - first + 1))
+    }.toMap
   }
 }

@@ -18,6 +18,32 @@ class CdcPipelineSpec extends SparkSpec {
     numConvs = 150, avgTurns = 10, seed = 42L, changeFiles = 3,
     changeEventsPerTurn = 0.5, malformedFrac = 0.03, schemaChangeFrac = 0.03)
 
+  /** Exact row count per sink partition key — the lineage counts a sink
+    * writer computes before its write. */
+  private def countsOf(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    df.groupBy(ExactlyOnceSink.partKey).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The committed batch against its own files: every manifest rowCount
+    * equals the rows read back from that partition directory, and the
+    * batch wrote at most one file per slot plus one per key. */
+  private def assertWriteMatchesLineage(outDir: String, batchId: Long): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dir = s"$outDir/events/batch=$batchId"
+    val manifest = new ExactlyOnceSink(spark, outDir).readManifest().get
+      .where(col("batchId") === batchId).collect()
+      .map(r => r.getAs[String]("partition") -> r.getAs[Long]("rowCount")).toMap
+    val files = spark.read.option("basePath", dir).parquet(dir)
+      .groupBy(ExactlyOnceSink.partKey).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(files == manifest, "manifest rowCount == rows in each partition directory")
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    var n = 0
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    val parts = 2 * spark.sparkContext.defaultParallelism
+    assert(n <= parts + manifest.size, s"$n files for ${manifest.size} keys over $parts slots")
+  }
+
   test("snapshot-then-incremental replay matches the batch oracle exactly") {
     val tableDir = tmpDir("table")
     val streamDir = tmpDir("stream")
@@ -301,6 +327,7 @@ class CdcPipelineSpec extends SparkSpec {
         col("source").withField("table", lit("conversations_b")))
         .otherwise(col("source")))
     CdcPipeline.processBatch(sink, twoTab, 0L)
+    assertWriteMatchesLineage(outDir, 0L)
     val want = twoTab.where(Router.isValid && !Router.isSchemaChange)
     val a = sink.readTable("conversations").get.count()
     val b = sink.readTable("conversations_b").get.count()
@@ -338,12 +365,43 @@ class CdcPipelineSpec extends SparkSpec {
     assert(sink.committedBatchIds == Seq(0L))
 
     // crash-before-manifest: data dir exists, no manifest → replay heals it
-    sink.writeBatch(1L, CdcPipeline.routed(events.limit(3))) // partial, uncommitted
+    val partial = CdcPipeline.routed(events.limit(3)).localCheckpoint()
+    sink.writeBatch(1L, partial, countsOf(partial)) // partial, uncommitted
     assert(sink.readCommitted("events").get.count() == c1) // invisible
+    // counts that miss a key present in the batch fail the write loudly
+    // (rows are never routed to a slot nobody counted) and commit nothing
+    val routedAll = CdcPipeline.routed(events)
+    val counts = countsOf(routedAll)
+    val err = intercept[Exception](sink.writeBatch(2L, routedAll, counts - counts.keys.max))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("missing from the batch counts")), err)
+    assert(!sink.isCommitted(2L) && sink.committedBatchIds == Seq(0L))
     CdcPipeline.processBatch(sink, events, 1L)
     assert(sink.committedBatchIds == Seq(0L, 1L))
     // batch 1 contains the full routed data set, not the partial 3 rows
     assert(sink.readCommitted("events").get.count() == 2 * c1)
+  }
+
+  test("count-ranged sink write: balanced slots, bounded files, exact lineage under zipf skew") {
+    import spark.implicits._
+    // the BENCH/SKEW.md skews at test size: zipf 0.5 (hot head, spread
+    // tail) and zipf 1.1 (the hottest conversation holds ~14 % of turns)
+    Seq(0.5, 1.1).foreach { z =>
+      val outDir = tmpDir(s"zipf$z")
+      val sink = new ExactlyOnceSink(spark, outDir)
+      val ev = TranscriptGen.events(spark, cfg.copy(numConvs = 400, zipf = z))
+        .map(_.event).toDF()
+      CdcPipeline.processBatch(sink, ev, 0L)
+      assertWriteMatchesLineage(outDir, 0L)
+      // no write task holds more than twice its even share
+      val keyed = CdcPipeline.routed(ev)
+      val counts = countsOf(keyed)
+      val perTask = sink.slotted(keyed, counts).rdd
+        .mapPartitions(it => Iterator(it.size.toLong)).collect()
+      val even = counts.values.sum.toDouble / perTask.length
+      assert(perTask.max <= 2 * even,
+        s"zipf $z: largest write task ${perTask.max} rows, even share $even (${perTask.mkString(",")})")
+    }
   }
 
   test("restart strategy: a failing batch recovers from checkpoint, exactly-once") {

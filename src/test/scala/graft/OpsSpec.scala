@@ -445,6 +445,13 @@ class OpsSpec extends SparkSpec {
           lit(bands), lit(rowsPerBand))))
       .toDF("id", "band", "sig")
     assertSameRows(kernelBanded, legacyBanded, "minhash_band_keys kernel")
+    // past the 31-bit ring's bound the kernel refuses instead of wrapping,
+    // both when called and when the SQL function is built
+    val maxRows = graft.functions.HashingKernels.MaxMinhashRows
+    intercept[IllegalArgumentException](graft.functions.HashingKernels.minhashBandKeys(
+      org.apache.spark.unsafe.types.UTF8String.fromString("a b c d"), 3, maxRows, 2))
+    intercept[Exception](docs.select(call_function("minhash_band_keys", col("text"), lit(3),
+      lit(maxRows + 1), lit(1))).collect())
     // md5fp60's digest-bytes fast path == the hex-string parse it replaced
     val rng = new scala.util.Random(7)
     val strs = Seq("", "a", "hello world", "Δ unicode ✓ λ", "the a of and to") ++
