@@ -30,15 +30,15 @@ object GraftSession {
     ready(engineDefaults(SparkSession.builder(), cores)
       .master(s"local[$cores]")
       .appName(appName)
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      )
       .getOrCreate())
 
-  /** The settings both factories share. */
+  /** The settings both factories share, the state store included: a
+    * cluster run must exercise the provider local runs use.
+    */
   private def engineDefaults(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -92,7 +92,7 @@ object Main {
         // savepoint's own copied stream — relocatable); a corrupt marker
         // fails loudly instead of guessing (re-ingest/duplication hazard)
         val streamDir = pipeline.Savepoint.streamDirOf(
-          org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
+          new org.apache.hadoop.fs.Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration),
           workDir)
         ChangeStreamReader.deliverChanges(spark, tableDir, streamDir)
         val t0 = System.nanoTime()

@@ -532,16 +532,16 @@ object Dedup {
     val spark = corpus.sparkSession
     // a REBUILD resets the epoch history: stale epoch markers from a
     // previous index generation would otherwise point readers at the old
-    // compacted tables instead of the fresh epoch-0 ones. Contract: a
-    // rebuild deletes the old epoch tables IMMEDIATELY (unlike compact's
-    // one-epoch deletion grace) — don't rebuild while readers are
+    // compacted tables instead of the fresh epoch-0 ones. Markers go first
+    // (a crash then leaves orphan tables, never a marker without tables).
+    // Contract: a rebuild deletes the old epoch tables IMMEDIATELY (unlike
+    // compact's one-epoch deletion grace) — don't rebuild while readers are
     // in-flight (they fail loudly with FAILED_READ, never read torn data)
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(d)) fs.listStatus(d).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("_epoch-") || nm.matches(".*-e\\d+"))
-        fs.delete(st.getPath, true)
+    val log = gramLog(spark, dir)
+    log.retire(Long.MaxValue, log.state())
+    val fs = log.dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(log.dir)) fs.listStatus(log.dir).foreach { st =>
+      if (st.getPath.getName.matches(".*-e\\d+")) fs.delete(st.getPath, true)
     }
     val idx = gramIndexOf(corpus, n, idCol, textCol)
     idx.md5s.write.mode("overwrite").parquet(s"$dir/md5")
@@ -556,21 +556,21 @@ object Dedup {
   /** Epoch-suffix for the index's table dirs: epoch 0 is the bare
     * `writeGramIndex` layout; compaction e publishes `md5-e<e>` etc.
     */
-  private def gramEpochSuffix(e: Int): String = if (e == 0) "" else s"-e$e"
+  private def gramEpochSuffix(e: Long): String = if (e == 0) "" else s"-e$e"
 
-  /** Highest published compaction epoch = max `_epoch-<e>` marker (the
-    * sink's single-visibility-point rule: a compaction's tables are
-    * invisible until its marker exists, so a crash mid-compaction leaves
-    * readers on the previous epoch).
+  /** The index's epoch log: one empty `_epoch-<e>` marker per published
+    * compaction, in the index dir itself. The current epoch is the highest
+    * marker (0 when none) — the sink's single-visibility-point rule: a
+    * compaction's tables are invisible until its marker exists, so a crash
+    * mid-compaction leaves readers on the previous epoch.
     */
-  private def gramIndexEpoch(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Int = {
+  private def gramLog(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val d = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(d)) 0
-    else fs.listStatus(d).iterator.map(_.getPath.getName)
-      .collect { case s if s.startsWith("_epoch-") => s.drop(7).toInt }
-      .foldLeft(0)(math.max)
+    new graft.util.CommitLog(d.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      d, graft.util.CommitLog.Name("_epoch-"))
   }
+
+  private def gramEpoch(s: graft.util.CommitLog.State): Long = s.entries.lastOption.getOrElse(0L)
 
   private def readGramIndexMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int = {
@@ -593,9 +593,7 @@ object Dedup {
   def readGramIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): GramIndex = {
     val n = readGramIndexMeta(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = gramEpochSuffix(gramIndexEpoch(fs, dir))
+    val s = gramEpochSuffix(gramEpoch(gramLog(spark, dir).state()))
     GramIndex(
       spark.read.parquet(s"$dir/md5$s"),
       spark.read.parquet(s"$dir/grams$s"),
@@ -621,9 +619,7 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = newDocs.sparkSession
     val n = readGramIndexMeta(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = gramEpochSuffix(gramIndexEpoch(fs, dir))
+    val s = gramEpochSuffix(gramEpoch(gramLog(spark, dir).state()))
     val idx = gramIndexOf(newDocs, n, idCol, textCol)
     idx.md5s.write.mode("append").parquet(s"$dir/md5$s")
     idx.grams.write.mode("append").parquet(s"$dir/grams$s")
@@ -658,9 +654,9 @@ object Dedup {
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, numPostingFiles: Int = 32): Int = {
     readGramIndexMeta(spark, dir) // validates format before any writes
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val e = gramIndexEpoch(fs, dir)
+    val log = gramLog(spark, dir)
+    val st = log.state()
+    val e = gramEpoch(st)
     val cur = readGramIndex(spark, dir)
     val next = e + 1
     val s = gramEpochSuffix(next)
@@ -670,14 +666,16 @@ object Dedup {
     cur.counts.write.mode("overwrite").parquet(s"$dir/counts$s")
     // readGramIndex already folded the df partials; one row per gram
     cur.gramDf.write.mode("overwrite").parquet(s"$dir/gramdf$s")
-    fs.createNewFile(new org.apache.hadoop.fs.Path(s"$dir/_epoch-$next"))
+    log.publish(next, "")
     if (e >= 1) {
       val sOld = gramEpochSuffix(e - 1)
+      val fs = log.dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       Seq("md5", "grams", "counts", "gramdf").foreach { t =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$t$sOld"), true)
       }
+      log.retire(e - 1, st)
     }
-    next
+    next.toInt
   }
 
   /** `incrementalDedupIds` against a prebuilt/stored corpus index — the

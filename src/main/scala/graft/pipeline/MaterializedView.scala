@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.util.CommitLog
+
 /** Shared at-rest mechanics for the two materialized "dynamic table"
   * stores (`MaterializedView`, `MaterializedTable`): content shards into
   * `nBuckets` generation-versioned parquet dirs, and a batch's commit is
@@ -13,55 +15,30 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * Layout:
   *   workDir/data/bucket=B/gen=N/   bucket B's full content as of batch N
-  *   workDir/_commits/N             atomic marker for batch N ("B N" lines)
+  *   workDir/_commits/N             marker for batch N ("B N" lines)
+  *   workDir/_commits/epoch-N       the full bucket→gen map as of batch N
   *
-  * The current store is, per bucket, the gen named by the LATEST
-  * committed marker; uncommitted gen dirs are invisible by construction.
-  * Write order per batch: gen dirs land (a replay overwrites them
-  * byte-identically) → marker renames in (THE commit point) → superseded
-  * gens die (a crash between the last two leaves harmless stale dirs the
-  * marker map ignores — the bucket's next rewrite cleans them). The
-  * marker chain is one tiny file per batch, folded driver-side on read;
-  * long-running stores should compact markers the way the sink compacts
-  * manifests (the chain is the only per-batch growth — data gens are
-  * deleted as they are superseded).
+  * The markers and epochs are a `CommitLog`. The current store is, per
+  * bucket, the gen named by the latest epoch's map with the markers above
+  * it folded in batch order; uncommitted gen dirs are invisible by
+  * construction. Write order per batch: gen dirs land (a replay overwrites
+  * them byte-identically) → marker publishes (THE commit point) → every
+  * older gen dir of each touched bucket dies. A crash before that last step
+  * leaves stale dirs no marker names; the bucket's next publish deletes
+  * them. `compactCommits` folds the marker chain — the store's only
+  * per-batch growth — into one epoch.
   */
-private[pipeline] final class BucketStore(spark: SparkSession,
+private[graft] final class BucketStore(spark: SparkSession,
     val workDir: String, val nBuckets: Int, val schema: StructType) {
   require(nBuckets >= 1, "bucket store: nBuckets must be >= 1")
 
   private val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def commitsDir = new Path(workDir, "_commits")
+  private val log = new CommitLog(fs, new Path(workDir, "_commits"),
+    CommitLog.Name(""), Some(CommitLog.Name("epoch-")))
   def genDir(bucket: Long, gen: Long): Path =
     new Path(workDir, s"data/bucket=$bucket/gen=$gen")
 
-  /** Epoch files (`_commits/epoch-N`): a compacted prefix of the marker
-    * chain — N is the highest batch id the epoch covers, the body is the
-    * full bucket→gen map as of N. The HIGHEST epoch wins; per-batch
-    * markers ≤ its N are redundant (skipped by the fold, deleted by the
-    * compaction that published it — crash in between leaves them lingering
-    * harmlessly).
-    */
-  private def epochs(): Seq[(Long, Path)] = {
-    if (!fs.exists(commitsDir)) return Seq.empty
-    fs.listStatus(commitsDir).toSeq.map(_.getPath)
-      .flatMap(p => p.getName match {
-        case n if n.startsWith("epoch-") =>
-          scala.util.Try(n.stripPrefix("epoch-").toLong).toOption.map(_ -> p)
-        case _ => None
-      }).sortBy(_._1)
-  }
-
-  private def markerIds(): Seq[Long] = {
-    if (!fs.exists(commitsDir)) return Seq.empty
-    fs.listStatus(commitsDir).toSeq
-      .map(_.getPath.getName).flatMap(n => scala.util.Try(n.toLong).toOption)
-      .sorted
-  }
-
-  def isCommitted(batchId: Long): Boolean =
-    epochs().lastOption.exists(_._1 >= batchId) ||
-      fs.exists(new Path(commitsDir, batchId.toString))
+  def isCommitted(batchId: Long): Boolean = log.isCommitted(batchId)
 
   private def parseMap(text: String): Map[Long, Long] =
     text.linesIterator.filter(_.nonEmpty).map { line =>
@@ -69,38 +46,28 @@ private[pipeline] final class BucketStore(spark: SparkSession,
       b.toLong -> g.toLong
     }.toMap
 
-  /** (bucket → gen) as of the latest committed batch: the highest epoch's
-    * map, then markers above it fold in batch order, later entries
+  /** (bucket → gen) as of the latest committed batch: the floor epoch's
+    * map, then the live markers fold in batch order, later entries
     * superseding earlier ones.
     */
-  def bucketGens(): Map[Long, Long] = {
-    val ep = epochs().lastOption
-    val base = ep.fold(Map.empty[Long, Long]) { case (_, p) =>
-      parseMap(graft.util.FsText.readText(fs, p)) }
-    val floor = ep.fold(Long.MinValue) { case (n, _) => n }
-    markerIds().filter(_ > floor).foldLeft(base) { (m, id) =>
-      m ++ parseMap(graft.util.FsText.readText(fs, new Path(commitsDir, id.toString)))
+  def bucketGens(s: CommitLog.State = log.state()): Map[Long, Long] =
+    s.live.foldLeft(s.floor.fold(Map.empty[Long, Long])(e => parseMap(log.read(log.epoch(e))))) {
+      (m, id) => m ++ parseMap(log.read(log.entry(id)))
     }
-  }
 
-  /** Fold the marker chain into one epoch file — the store's only
-    * per-batch growth (data gens die as they are superseded). Crash-safe
-    * by the single-rename rule: the new epoch publishes atomically FIRST;
-    * only then do the markers it covers (and older epochs) die — a crash
-    * in between leaves redundant files the fold already ignores. Returns
-    * the epoch's upper batch id (-1 when nothing has committed).
+  /** Fold the marker chain into one epoch file, then retire the markers and
+    * older epochs it covers (a crash in between leaves files the fold
+    * already skips). Returns the epoch's upper batch id (-1 when nothing
+    * has committed).
     */
   def compactCommits(): Long = {
-    val ids = markerIds()
-    val prev = epochs()
-    val upTo = (prev.map(_._1) ++ ids).foldLeft(-1L)(math.max)
-    if (upTo < 0) return -1L
-    val map = bucketGens()
-    graft.util.FsText.writeAtomic(fs, new Path(commitsDir, s"epoch-$upTo"),
-      map.toSeq.sortBy(_._1).map { case (b, g) => s"$b $g" }.mkString("\n"))
-    ids.filter(_ <= upTo)
-      .foreach(id => fs.delete(new Path(commitsDir, id.toString), false))
-    prev.filter(_._1 < upTo).foreach { case (_, p) => fs.delete(p, false) }
+    val s = log.state()
+    val upTo = s.highest
+    if (upTo >= 0) {
+      log.publishEpoch(upTo,
+        bucketGens(s).toSeq.sortBy(_._1).map { case (b, g) => s"$b $g" }.mkString("\n"))
+      log.retire(upTo, s)
+    }
     upTo
   }
 
@@ -127,7 +94,6 @@ private[pipeline] final class BucketStore(spark: SparkSession,
     * replay after a crash here still short-circuits.
     */
   def publish(batchId: Long, touched: Seq[Long], content: DataFrame): Unit = {
-    val gens = bucketGens()
     // one write job per touched bucket — a replay overwrites
     // byte-identically; untouched buckets are never opened. A bucket
     // whose new content is EMPTY still commits (parquet leaves a dir
@@ -137,11 +103,17 @@ private[pipeline] final class BucketStore(spark: SparkSession,
         .select(schema.fieldNames.map(col): _*)
         .write.mode("overwrite").parquet(genDir(b, batchId).toString)
     }
-    graft.util.FsText.writeAtomic(fs, new Path(commitsDir, batchId.toString),
-      touched.map(b => s"$b $batchId").mkString("\n"))
+    log.publish(batchId, touched.map(b => s"$b $batchId").mkString("\n"))
+    // every older gen of a touched bucket, the one the previous marker
+    // named and any a crash left behind, from one listing of the bucket
+    val gen = """gen=(\d+)""".r
     touched.foreach { b =>
-      gens.get(b).filter(_ < batchId)
-        .foreach(g => fs.delete(genDir(b, g), true))
+      fs.listStatus(genDir(b, batchId).getParent).foreach { st =>
+        st.getPath.getName match {
+          case gen(g) if g.toLong < batchId => fs.delete(st.getPath, true)
+          case _ =>
+        }
+      }
     }
   }
 }

@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.util.CommitLog
 
 /** CONTINUOUS sequence packing: documents arrive as a file stream and are
   * packed onto one global token tape cut into fixed `seqLen`-token
@@ -41,51 +43,28 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamPack {
 
-  private def commitsDir(workDir: String) = new Path(workDir, "_commits")
-
-  private def fsOf(spark: SparkSession, workDir: String) =
-    new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The cursor log: `_commits/N` holds the cursor after batch N. */
+  private def log(spark: SparkSession, workDir: String) = new CommitLog(
+    new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+    new Path(workDir, "_commits"), CommitLog.Name(""))
 
   def isCommitted(spark: SparkSession, workDir: String, batchId: Long): Boolean =
-    fsOf(spark, workDir).exists(new Path(commitsDir(workDir), batchId.toString))
+    log(spark, workDir).isCommitted(batchId)
 
   /** (latest committed batch, its cursor); (-1, 0) before any commit. */
   def cursor(spark: SparkSession, workDir: String): (Long, Long) = {
-    val fs = fsOf(spark, workDir)
-    if (!fs.exists(commitsDir(workDir))) return (-1L, 0L)
-    val ids = fs.listStatus(commitsDir(workDir)).toSeq
-      .map(_.getPath.getName).flatMap(n => scala.util.Try(n.toLong).toOption)
-    if (ids.isEmpty) (-1L, 0L)
-    else {
-      val last = ids.max
-      val text = graft.util.FsText.readText(fs,
-        new Path(commitsDir(workDir), last.toString)).trim
-      (last, text.toLong)
-    }
+    val l = log(spark, workDir)
+    l.state().entries.lastOption.fold((-1L, 0L))(id => (id, l.read(l.entry(id)).trim.toLong))
   }
 
   /** The folded manifest: one row per sequence across all committed
     * batches (boundary sequences sum their per-batch contributions).
     */
   def readManifest(spark: SparkSession, workDir: String): DataFrame = {
-    val fs = fsOf(spark, workDir)
-    val committed = if (!fs.exists(commitsDir(workDir))) Set.empty[Long]
-      else fs.listStatus(commitsDir(workDir)).toSeq
-        .map(_.getPath.getName).flatMap(n => scala.util.Try(n.toLong).toOption).toSet
-    val dirs = committed.toSeq.sorted
-      .map(b => new Path(workDir, s"seqs/batch=$b"))
-      .filter(fs.exists(_)).map(_.toString)
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("seq_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_docs",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_tokens",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("first_doc",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("last_doc",
-        org.apache.spark.sql.types.LongType)))
+    val dirs = log(spark, workDir).state().entries
+      .map(b => new Path(workDir, s"seqs/batch=$b").toString)
+    val schema = StructType(Seq("seq_id", "n_docs", "n_tokens", "first_doc", "last_doc")
+      .map(StructField(_, LongType)))
     val raw = if (dirs.isEmpty)
       spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
@@ -101,15 +80,14 @@ object StreamPack {
   def applyBatch(spark: SparkSession, workDir: String, batchId: Long,
       docs: DataFrame, seqLen: Int, binBits: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    if (isCommitted(spark, workDir, batchId)) return
-    val fs = fsOf(spark, workDir)
+    val l = log(spark, workDir)
+    if (l.isCommitted(batchId)) return
     val (_, cur) = cursor(spark, workDir)
     val (manifest, batchTokens) = graft.ops.Corpus.packSequencesFrom(
       docs, seqLen, baseOffset = cur, binBits, idCol, textCol)
     manifest.write.mode("overwrite")
       .parquet(new Path(workDir, s"seqs/batch=$batchId").toString)
-    graft.util.FsText.writeAtomic(fs,
-      new Path(commitsDir(workDir), batchId.toString), (cur + batchTokens).toString)
+    l.publish(batchId, (cur + batchTokens).toString)
   }
 
   /** Start the continuous packer over a parquet document file stream. */

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.CommitLog
+
 /** Idempotent exactly-once file sink with per-partition commit lineage
   * (SURVEY.md §7.4).
   *
@@ -94,16 +96,12 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     */
   private def recoverRowBytes(): Unit = {
     def measure(dir: String, manifest: Path): Unit =
-      if (fs.exists(manifest)) {
-        val rows = """"rowCount"\s*:\s*(\d+)""".r
-          .findAllMatchIn(graft.util.FsText.readText(fs, manifest))
-          .map(_.group(1).toLong).sum
-        observeWritten(dir, rows)
-      }
-    committedBatchIds.lastOption match {
-      case Some(last) => measure(batchDir(last), manifestPath(last))
-      case None => epochFloor.foreach(c =>
-        measure(compactDir(c), new Path(f"$outDir/_manifest/epoch-$c%09d.json")))
+      observeWritten(dir, """"rowCount"\s*:\s*(\d+)""".r
+        .findAllMatchIn(log.read(manifest)).map(_.group(1).toLong).sum)
+    val s = log.state()
+    s.live.lastOption match {
+      case Some(last) => measure(batchDir(last), log.entry(last))
+      case None => s.floor.foreach(c => measure(compactDir(c), log.epoch(c)))
     }
   }
 
@@ -136,46 +134,29 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
       }
     }
 
-  private def manifestPath(batchId: Long) = new Path(f"$outDir/_manifest/batch-$batchId%09d.json")
-
   private def batchDir(batchId: Long) = s"$outDir/events/batch=$batchId"
 
   private def compactDir(c: Long) = s"$outDir/events/batch=$c-compact"
 
+  /** The commit log: `_manifest/batch-<id>.json` per batch (its lineage,
+    * one JSON line per partition), `epoch-<c>.json` per compaction.
+    */
+  @transient private lazy val log = new CommitLog(fs, new Path(outDir, "_manifest"),
+    CommitLog.Name("batch-", 9, ".json"), Some(CommitLog.Name("epoch-", 9, ".json")))
+
   /** Highest compaction epoch: batches with id ≤ it live (bin-packed) in
     * `compactDir` and their per-batch manifests are retired.
     */
-  def epochFloor: Option[Long] = {
-    val dir = new Path(s"$outDir/_manifest")
-    if (!fs.exists(dir)) None
-    else fs.globStatus(new Path(s"$outDir/_manifest/epoch-*.json"))
-      .map(_.getPath.getName.stripPrefix("epoch-").stripSuffix(".json").toLong)
-      .sorted.lastOption
-  }
+  def epochFloor: Option[Long] = log.state().floor
 
-  def isCommitted(batchId: Long): Boolean =
-    fs.exists(manifestPath(batchId)) || epochFloor.exists(batchId <= _)
+  def isCommitted(batchId: Long): Boolean = log.isCommitted(batchId)
 
-  /** Monotone progress marker: the highest batch id ever committed, −1 if
-    * none. `committedBatchIds.size` is NOT monotone — compaction retires
-    * per-batch manifests behind the epoch floor and shrinks the count, so
-    * a restart-budget check keyed on the size would fail to recognize
-    * real progress after a compaction (the floor preserves it here).
+  /** Monotone progress marker (`CommitLog.State.highest`): the highest
+    * batch id ever committed, −1 if none.
     */
-  def highestCommittedBatchId: Long =
-    (committedBatchIds ++ epochFloor.toSeq).foldLeft(-1L)(math.max)
+  def highestCommittedBatchId: Long = log.state().highest
 
-  def committedBatchIds: Seq[Long] = {
-    val dir = new Path(s"$outDir/_manifest")
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val floor = epochFloor
-      fs.globStatus(new Path(s"$outDir/_manifest/batch-*.json"))
-        .map(_.getPath.getName.stripPrefix("batch-").stripSuffix(".json").toLong)
-        .filter(id => floor.forall(id > _))
-        .sorted.toSeq
-    }
-  }
+  def committedBatchIds: Seq[Long] = log.state().live
 
   /** Single-pass write of a routed, time-bucketed batch. `df` must carry
     * `route`, `src_table`, `p_date`; `counts` is its exact row count per
@@ -219,25 +200,19 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     df.repartitionById(parts, shiftright(cell, ExactlyOnceSink.CellBits).cast("int"))
   }
 
-  /** Atomically publish the batch (rename makes the commit visible). */
+  /** Atomically publish the batch's lineage (the manifest rename makes
+    * the commit visible).
+    */
   def commit(batchId: Long, lineage: Seq[(String, Long, Long, Long)]): Unit = {
     observeWritten(batchDir(batchId), lineage.map(_._2).sum)
-    val tmp = new Path(f"$outDir/_manifest/.tmp-batch-$batchId%09d.json")
-    val dst = manifestPath(batchId)
-    fs.mkdirs(dst.getParent)
-    val body = lineage
-      .map { case (part, rows, minLsn, maxLsn) =>
-        s"""{"batchId":$batchId,"partition":"$part","rowCount":$rows,"minLsn":$minLsn,"maxLsn":$maxLsn}"""
-      }
-      .mkString("\n")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-    // A replay re-commits byte-identical content, so an existing manifest
-    // can be kept as-is: delete-then-rename would open a window where a
-    // concurrent reader transiently sees the batch as uncommitted.
-    if (fs.exists(dst)) { fs.delete(tmp, false); return }
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"manifest rename failed for batch $batchId")
+    log.publish(batchId, manifestBody(batchId, lineage, ""))
   }
+
+  private def manifestBody(batchId: Long, lineage: Seq[(String, Long, Long, Long)],
+      extra: String): String =
+    lineage.map { case (part, rows, minLsn, maxLsn) =>
+      s"""{"batchId":$batchId,"partition":"$part","rowCount":$rows,"minLsn":$minLsn,"maxLsn":$maxLsn$extra}"""
+    }.mkString("\n")
 
   private val sectionRoute =
     Map("events" -> "data", "errors" -> "error", "schema_changes" -> "schema")
@@ -254,11 +229,11 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
       asOfBatch: Option[Long] = None): Option[DataFrame] = {
     val route = sectionRoute.getOrElse(section,
       throw new IllegalArgumentException(s"unknown section $section"))
-    val floor = epochFloor
-    asOfBatch.foreach(a => require(floor.forall(a >= _),
-      s"asOfBatch=$a predates the compaction epoch ${floor.get} — that history was compacted away"))
-    val ids = asOfBatch.fold(committedBatchIds)(b => committedBatchIds.filter(_ <= b))
-    readDirs(floor.map(compactDir).toSeq ++ ids.map(batchDir)).map { df =>
+    val s = log.state()
+    asOfBatch.foreach(a => require(s.floor.forall(a >= _),
+      s"asOfBatch=$a predates the compaction epoch ${s.floor.get} — that history was compacted away"))
+    val ids = asOfBatch.fold(s.live)(b => s.live.filter(_ <= b))
+    readDirs(s.floor.map(compactDir).toSeq ++ ids.map(batchDir)).map { df =>
       val routeDf = df.where(col("route") === route)
       table.fold(routeDf)(t => routeDf.where(col("src_table") === t))
     }
@@ -292,27 +267,15 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
       _.select("src_table").distinct().collect().map(_.getString(0)).sorted.toSeq)
       .getOrElse(Seq.empty)
 
-  /** The lineage manifest as a DataFrame (metrics / audits): live per-batch
-    * manifests plus the current compaction epoch's aggregated lineage.
-    * Retired manifests linger one epoch cycle on disk (deferred cleanup —
-    * see `compact`), so rows are filtered by the floor: live batch rows are
-    * `batchId > floor`, and only the CURRENT epoch's compacted rows count.
+  /** The lineage manifest as a DataFrame (metrics / audits): the live
+    * per-batch manifests plus the current compaction epoch's aggregated
+    * lineage. Retired manifests linger one epoch cycle on disk (deferred
+    * cleanup — see `compact`) but are not read.
     */
   def readManifest(): Option[DataFrame] = {
-    val globs = Seq(s"$outDir/_manifest/batch-*.json", s"$outDir/_manifest/epoch-*.json")
-      .filter(g => fs.globStatus(new Path(g)).nonEmpty)
-    if (globs.isEmpty) None
-    else {
-      val m = spark.read.json(globs: _*)
-      Some(epochFloor match {
-        case Some(f) =>
-          val compactedRow =
-            if (m.columns.contains("compacted")) col("compacted") === true
-            else lit(false)
-          m.where(col("batchId") > f || (compactedRow && col("batchId") === f))
-        case None => m
-      })
-    }
+    val s = log.state()
+    val files = s.live.map(log.entry) ++ s.floor.map(log.epoch)
+    if (files.isEmpty) None else Some(spark.read.json(files.map(_.toString): _*))
   }
 
   /** Log compaction (Iceberg `rewrite_data_files`-style bin-packing):
@@ -347,8 +310,9 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     * config scaladoc); deletion is never gated on reader liveness.
     */
   def compact(upToBatch: Long = Long.MaxValue): Long = {
-    val floor = epochFloor
-    val eligible = committedBatchIds.filter(_ <= upToBatch)
+    val s = log.state()
+    val floor = s.floor
+    val eligible = s.live.filter(_ <= upToBatch)
     require(eligible.nonEmpty, "compact: no live batches at or below upToBatch")
     val c = eligible.max
     val staging = s"$outDir/events/.staging-compact-$c"
@@ -372,35 +336,25 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     fs.delete(dst, true) // orphan from a crashed earlier attempt at the same c
     if (!fs.rename(new Path(staging), dst))
       throw new java.io.IOException(s"compaction rename failed for epoch $c")
-    val tmp = new Path(f"$outDir/_manifest/.tmp-epoch-$c%09d.json")
-    val marker = new Path(f"$outDir/_manifest/epoch-$c%09d.json")
-    val body = lineage.map { case (part, rows, minLsn, maxLsn) =>
-      s"""{"batchId":$c,"partition":"$part","rowCount":$rows,"minLsn":$minLsn,"maxLsn":$maxLsn,"compacted":true}"""
-    }.mkString("\n")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"epoch marker rename failed for $c")
+    log.publishEpoch(c, manifestBody(c, lineage, ""","compacted":true"""))
     // ---- visibility flipped; cleanup is DEFERRED one epoch ----
     // Artifacts retired by THIS flip (the eligible batch dirs and the
     // previous compacted dir) stay on disk until the NEXT compaction, so a
     // reader that resolved its dir list just before the flip can still
     // finish its scan — Iceberg's rewrite-now-expire-later. Only artifacts
     // already invisible for a full epoch cycle (id ≤ previous floor) are
-    // physically deleted now. Manifest/visibility logic never sees the
-    // stale files: committedBatchIds and readManifest filter by the floor.
-    def sweep(glob: String, name: scala.util.matching.Regex, dead: Long => Boolean): Unit =
-      fs.globStatus(new Path(s"$outDir/$glob")).foreach { st =>
+    // physically deleted now: data dirs first, then their log entries.
+    floor.foreach { p =>
+      val batch = """batch=(\d+)""".r
+      val compacted = """batch=(\d+)-compact""".r
+      fs.listStatus(new Path(s"$outDir/events")).foreach { st =>
         st.getPath.getName match {
-          case name(id) if dead(id.toLong) => fs.delete(st.getPath, true)
+          case batch(id) if id.toLong <= p => fs.delete(st.getPath, true)
+          case compacted(id) if id.toLong < p => fs.delete(st.getPath, true)
           case _ =>
         }
       }
-    floor.foreach { p =>
-      sweep("events/batch=*", """batch=(\d+)""".r, _ <= p)
-      sweep("_manifest/batch-*.json", """batch-(\d+)\.json""".r, _ <= p)
-      sweep("events/batch=*-compact", """batch=(\d+)-compact""".r, _ < p)
-      sweep("_manifest/epoch-*.json", """epoch-(\d+)\.json""".r, _ < p)
+      log.retire(p, s)
     }
     c
   }

@@ -33,7 +33,7 @@ object ChangeStreamReader {
     */
   def spoolSnapshot(spark: SparkSession, tableDir: String, streamDir: String,
       numFiles: Int = 8): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$streamDir/_snapshot_spooled")
     if (fs.exists(marker)) return
     val snap = spark.read.parquet(s"$tableDir/snapshot")
@@ -75,8 +75,10 @@ object ChangeStreamReader {
     */
   def deliverChanges(spark: SparkSession, tableDir: String, streamDir: String,
       phaseFilter: Int => Boolean = _ => true): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val changes = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tableDir/changes/chg-*.parquet"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(tableDir).getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(conf)
+    val changes = src.globStatus(new org.apache.hadoop.fs.Path(s"$tableDir/changes/chg-*.parquet"))
     var n = 0
     changes.foreach { st =>
       val name = st.getPath.getName // chg-PPPP-III.parquet
@@ -87,8 +89,7 @@ object ChangeStreamReader {
           // copy to a dot-tmp (invisible to FileStreamSource) then rename:
           // a live continuous-mode query must never list a half-copied file
           val tmp = new org.apache.hadoop.fs.Path(s"$streamDir/.tmp-10000-$name")
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, tmp, false,
-            spark.sparkContext.hadoopConfiguration)
+          org.apache.hadoop.fs.FileUtil.copy(src, st.getPath, fs, tmp, false, conf)
           if (!fs.rename(tmp, dst))
             throw new java.io.IOException(s"change delivery rename failed: $dst")
           n += 1
@@ -143,7 +144,7 @@ object ChangeStreamReader {
     */
   def writeJsonlSegment(df: DataFrame, streamDir: String, name: String): Unit = {
     val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = s"$streamDir/.tmp-$name"
     df.toJSON.coalesce(1).write.mode("overwrite").text(tmp)
     fs.mkdirs(new org.apache.hadoop.fs.Path(streamDir))

@@ -251,7 +251,7 @@ object TranscriptGen {
       numFiles: Int = 1): Unit = {
     val tmp = s"$dir/.tmp-chg-$phase"
     ds.repartition(numFiles).write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       ds.sparkSession.sparkContext.hadoopConfiguration)
     val dstDir = new org.apache.hadoop.fs.Path(s"$dir/changes")
     fs.mkdirs(dstDir)

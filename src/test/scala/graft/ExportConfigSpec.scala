@@ -533,38 +533,6 @@ class ExportConfigSpec extends SparkSpec {
     ()
   }
 
-  test("savepoint: mid-creation crash leaves NO partial artifact; original still resumes") {
-    val tableDir = tmpDir("cwtable")
-    val w = tmpDir("cwwork")
-    val cfg = GenConfig(numConvs = 20, avgTurns = 6, changeFiles = 2)
-    TranscriptGen.writeTable(spark, cfg, tableDir)
-    ChangeStreamReader.deliverChanges(spark, tableDir, s"$w/stream", phaseFilter = _ == 0)
-    CdcPipeline.runAvailable(spark, tableDir, s"$w/stream", s"$w/out", s"$w/checkpoint")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // crash between the checkpoint/sink/stream copy and the marker write —
-    // both windows: before and after the seen-file rebase. A partial
-    // artifact without its marker resumes against an UNREBASED checkpoint
-    // and duplicates everything, so the cleanup contract is: dest is GONE.
-    for (point <- Seq("after-copy", "after-rebase")) {
-      val dest = s"${tmpDir(s"cwdest$point")}/sp"
-      try {
-        sys.props("graft.test.savepoint.crash") = point
-        val e = intercept[IllegalStateException](pipeline.Savepoint.create(spark, w, dest))
-        assert(e.getMessage.contains("injected"), e.getMessage)
-      } finally { sys.props.remove("graft.test.savepoint.crash"); () }
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(dest)),
-        s"crash at $point must not leave a partial savepoint artifact")
-    }
-    // the original lineage is untouched by the failed attempts: deliver the
-    // remaining phase and drain to the exact oracle state
-    ChangeStreamReader.deliverChanges(spark, tableDir, s"$w/stream")
-    CdcPipeline.runAvailable(spark, tableDir, s"$w/stream", s"$w/out", s"$w/checkpoint")
-    assertSameRows(
-      CdcPipeline.materialize(spark, s"$w/out").toDF(),
-      TranscriptGen.finalState(spark, cfg).toDF(),
-      "original workDir resumes after crashed savepoint attempts")
-  }
-
   test("savepoint: URI-encoded (space-containing) workDir rebases and resumes") {
     val tableDir = tmpDir("uritable")
     val w = s"${tmpDir("uriwork")}/work dir with spaces"
