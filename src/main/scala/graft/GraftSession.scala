@@ -48,6 +48,10 @@ object GraftSession {
       // sort-merge; parallelism-independent (a per-partition strategy, with
       // the planner's build-side size guard + AQE). A/B at sf0.1 (min-of-4,
       // same window): q11 1.38→1.34, q22 2.31→2.25, q60 1.67→1.56.
+      // The cost: a shuffled-hash build side is an in-memory hash map that
+      // cannot spill, so a partition whose size the planner or AQE's
+      // coalescing underestimates can run out of memory where sort-merge
+      // would have spilled to disk.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -381,7 +381,7 @@ object HashingKernels {
   val MaxMinhashRows = 1 << 15
 
   /** MinHash LSH band keys in ONE pass per document (r7b): the
-    * `minhashSignatures` → band-slice → `xxhash64(slice)` pipeline
+    * MinHash signature → band-slice → `xxhash64(slice)` pipeline
     * collapsed into a narrow kernel. Replicates the expression algebra
     * BIT-FOR-BIT:
     *   - gram hash gh = Spark `xxhash64(gram)` = XXH64.hashUTF8String(g, 42)

@@ -213,35 +213,6 @@ object Dedup {
       .where(col("n_shared") >= minShared)
   }
 
-  /** MinHash signature matrix: for each doc, numHashes minima of
-    * (a_k * xxhash64(gram) + b_k) mod p. One explode + one groupBy(id).
-    */
-  def minhashSignatures(g: DataFrame, numHashes: Int): DataFrame =
-    minhashSignaturesHashed(
-      g.select(col("id"), xxhash64(col("gram")).as("gh")), numHashes)
-
-  /** The same signature matrix over PRE-HASHED grams (id, gh) — the form
-    * `minhashLshPairs` feeds from its cached hashed projection. The base
-    * ring hash `h = gh mod p` is materialized as ONE projected column
-    * before the aggregate (r7): as a shared subtree inside `numHashes`
-    * min-aggregates its CSE is at codegen's discretion, and re-evaluating
-    * xxhash64+pmod 64× per gram row dominated the signature pass.
-    */
-  private def minhashSignaturesHashed(gh: DataFrame, numHashes: Int): DataFrame = {
-    // 31-bit Mersenne ring keeps every product inside a 64-bit long under
-    // ANSI mode (no silent wrap in Spark 4): h < 2^31, a < 2^8 → a*h+b < 2^40
-    val p = 2147483647L // 2^31 - 1
-    val mins = (0 until numHashes).map { k =>
-      val a = 2L * k + 1
-      val b = 40503L * (k + 1)
-      min(pmod(col("_h") * a + b, lit(p))).as(s"h$k")
-    }
-    gh.select(col("id"), pmod(col("gh"), lit(p)).as("_h"))
-      .groupBy(col("id")).agg(mins.head, mins.tail: _*)
-  }
-
-  private def pmod(c: Column, m: Column): Column = ((c % m) + m) % m
-
   /** MinHash + LSH banding → candidate pairs → exact-Jaccard verification.
     * bands*rowsPerBand hash functions; candidate threshold ≈
     * (1/bands)^(1/rowsPerBand). Verification keeps precision exact, so the

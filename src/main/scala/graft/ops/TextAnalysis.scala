@@ -62,25 +62,10 @@ object TextAnalysis {
     * interpreted builtin-HOF tree (aggregate/filter/array_distinct per
     * token) — bit-identical by construction (the kernel replicates the
     * expression's float-op order and Spark Round semantics; OpsSpec pins
-    * kernel == expression-formula equality).
+    * kernel == the expression form, kept in test scope).
     */
   def qualityScore(text: Column): Column =
     call_function("quality_score", text)
-
-  /** The pre-r7 expression form of `qualityScore` — kept as the reference
-    * the kernel-equality test compares against (not used in any query
-    * path).
-    */
-  def qualityScoreExpr(text: Column): Column = {
-    val w = tokens(text)
-    val n = size(w).cast("double")
-    val lenScore = least(lit(1.0), n / 100.0)
-    val stopScore = least(lit(1.0), stopwordRatio(text) * 5.0)
-    val charSum = aggregate(w, lit(0L), (acc, t) => acc + length(t)).cast("double")
-    val meanLenScore = least(lit(1.0), charSum / n / 8.0)
-    val diversity = size(array_distinct(w)).cast("double") / n
-    round((lenScore + stopScore + meanLenScore + diversity) / 4.0, 4)
-  }
 
   /** Pattern scrubbing — the PII-redaction plumbing of corpus pipelines:
     * every match of `pattern` is replaced by the mask token, and

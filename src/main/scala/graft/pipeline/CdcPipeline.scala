@@ -108,7 +108,10 @@ object CdcPipeline {
       case "json" => ChangeStreamReader.jsonStream(spark, streamDir, maxFilesPerTrigger)
       case other => throw new IllegalArgumentException(s"unknown ingest format $other")
     }
-    src
+    // stamped in the streaming plan, where the engine binds it to the
+    // batch timestamp in the offset log: a batch replayed after a crash
+    // commits the same processing_timestamp as its first attempt
+    src.withColumn("processing_timestamp", current_timestamp())
       .writeStream
       .queryName("graft-cdc")
       .option("checkpointLocation", checkpointDir)
@@ -203,11 +206,20 @@ object CdcPipeline {
     * last-writer-wins by lsn per (conv_id, turn_idx); deletes drop the row.
     * Order-independent — correctness does not depend on file arrival order.
     *
+    * The key of an event is its after-image key, falling back to the
+    * before-image's, and the output row's `conv_id`/`turn_idx` ARE those
+    * window keys; the payload columns come from the after-image. So an
+    * after-image with a null `conv_id` (or `turn_idx`) whose before-image
+    * has one comes out under the key it was deduplicated under.
+    *
     * Scale: one shuffle on (conv_id, turn_idx) — fine-grained keys, so hot
     * conversations spread across turn_idx and don't skew a single reducer.
-    * Output is re-clustered by conv_id and sorted for stable turn ordering
-    * (the per-row invariant: per-turn text equality under stable
-    * (turn_idx, ts) ordering).
+    * Because the output keys are the window's partition keys, a caller's
+    * filter on them (`materialize(...).where(conv_id === c)`, a
+    * one-conversation lookup) is pushed through the window and runs as a
+    * scan filter below the shuffle: only that conversation's rows are
+    * sorted and shuffled. The output is hash-partitioned on the key, which
+    * `diff`'s join reuses.
     */
   def materialize(spark: SparkSession, outDir: String,
       table: Option[String] = None, asOfBatch: Option[Long] = None): Dataset[Turn] = {
@@ -228,7 +240,8 @@ object CdcPipeline {
       // degenerate event poison the whole materialization; treat it as a
       // state no-op instead
       .filter($"rn" === 1 && $"op" =!= "d" && $"after".isNotNull)
-      .select($"after.*")
+      .select($"k_conv".as("conv_id"), $"k_idx".as("turn_idx"),
+        $"after.role", $"after.text", $"after.tool", $"after.ts")
       .as[Turn]
   }
 
@@ -244,6 +257,8 @@ object CdcPipeline {
     * `materialize` does (partition-pruned by table, batch-pruned by the
     * lineage); the two sides meet in ONE full-outer equi-join on the key
     * both already shuffle on. Nothing broadcasts, nothing driver-side.
+    * `materialize` outputs its window keys, so the join reuses each side's
+    * window partitioning: the plan has two exchanges, one per side.
     */
   def diff(spark: SparkSession, outDir: String, fromBatch: Long, toBatch: Long,
       table: Option[String] = None): DataFrame = {

@@ -88,13 +88,20 @@ object Router {
 
   /** Enrichment of the data route (reference adds processing_timestamp,
     * pipeline_version, data_quality_score — CDCEventProcessor.scala:73-96).
-    * processing_timestamp is wall-clock by nature and is excluded from
-    * equality oracles.
+    * A `processing_timestamp` the input already carries is kept (the
+    * streaming pipeline stamps it from the offset log, so a replayed batch
+    * rewrites the same value); otherwise it is the wall clock of this call.
+    * Either way it follows the input's other columns, so both paths commit
+    * the same file schema.
     */
-  def enrich(df: DataFrame): DataFrame =
-    df.withColumn("processing_timestamp", current_timestamp())
+  def enrich(df: DataFrame): DataFrame = {
+    val ts = if (df.columns.contains("processing_timestamp")) df.col("processing_timestamp")
+      else current_timestamp()
+    df.select(df.columns.filter(_ != "processing_timestamp").map(df.col) :+
+        ts.as("processing_timestamp"): _*)
       .withColumn("pipeline_version", lit(PipelineVersion))
       .withColumn("data_quality_score", qualityScore)
+  }
 
   /** Error-route wrapper (reference handlers/ErrorHandler.scala:12-26).
     * For the raw-JSON ingest edge the original string (`_raw`) is preserved

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CdcPipeline, Router}
@@ -462,5 +466,115 @@ class CdcPipelineSpec extends SparkSpec {
     // deletes (after=null) score on before
     val delScores = scored.where($"op" === "d").select("q").collect().map(_.getDouble(0))
     assert(delScores.forall(_ > 0.0))
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = collect(p) { case e: ShuffleExchangeExec => e }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = collect(p) { case s: FileSourceScanExec => s }
+  }
+
+  /** A sink with one committed batch per generator phase (0 = snapshot). */
+  private lazy val phasedSink: (String, Long) = {
+    import spark.implicits._
+    val outDir = tmpDir("phased")
+    val sink = new ExactlyOnceSink(spark, outDir)
+    val ev = TranscriptGen.events(spark, cfg.copy(numConvs = 40)).toDF()
+    (-1 until cfg.changeFiles).foreach(p =>
+      CdcPipeline.processBatch(sink, ev.where($"phase" === p).select($"event.*"), p + 1L))
+    (outDir, sink.highestCommittedBatchId)
+  }
+
+  test("one-conversation lookup: the conv filter runs at the scan, below the only exchange") {
+    val (outDir, b) = phasedSink
+    val all = CdcPipeline.materialize(spark, outDir, None, Some(b)).toDF().collect()
+    val c = all.groupBy(_.getString(0)).maxBy(_._2.length)._1
+    val lookup = CdcPipeline.materialize(spark, outDir, None, Some(b)).toDF()
+      .where(col("conv_id") === c)
+    assert(lookup.collect().map(_.toString).sorted.toSeq ==
+      all.filter(_.getString(0) == c).map(_.toString).sorted.toSeq)
+    val plan = lookup.queryExecution.executedPlan
+    val ex = Plans.exchanges(plan)
+    assert(ex.size == 1, plan.toString())
+    val scans = Plans.scans(ex.head)
+    assert(scans.nonEmpty && scans.size == Plans.scans(plan).size, plan.toString())
+    scans.foreach(sc => assert(sc.dataFilters.exists(_.find {
+      case Literal(v, _) => String.valueOf(v) == c
+      case _ => false
+    }.isDefined), s"the conv filter must be a scan DataFilter: ${sc.dataFilters}"))
+  }
+
+  test("diff joins on the window partitioning: two exchanges, one per side") {
+    val (outDir, b) = phasedSink
+    val d = CdcPipeline.diff(spark, outDir, 1L, b)
+    assert(d.count() > 0)
+    val plan = d.queryExecution.executedPlan
+    assert(Plans.exchanges(plan).size == 2, plan.toString())
+  }
+
+  test("materialize keys a row by its window key when the after-image lacks one") {
+    import spark.implicits._
+    import graft.model.{ChangeEvent, SourceInfo, Turn}
+    val ts = new java.sql.Timestamp(1700000000000L)
+    def turn(c: String, i: Int, text: String) = Turn(c, i, "user", text, None, ts)
+    def src(lsn: Long) =
+      Some(SourceInfo("transcripts", "public", "conversations", 1L, None, Some(lsn)))
+    val evs = Seq(
+      ChangeEvent(Some("c"), 1L, None, Some(turn("a", 0, "a0")), src(1L), None),
+      // the after-image lost its conv_id: keyed (and now output) under "a"
+      ChangeEvent(Some("u"), 2L, Some(turn("a", 0, "a0")), Some(turn(null, 0, "a0 v2")), src(2L), None),
+      ChangeEvent(Some("c"), 3L, None, Some(turn("b", 1, "b1")), src(3L), None),
+      ChangeEvent(Some("u"), 4L, Some(turn("b", 1, "b1")), Some(turn("b", 1, "b1 v2")), src(4L), None)
+    ).toDF()
+      // ... and this one its turn_idx (the Turn encoder cannot build it)
+      .withColumn("after", when(col("source.lsn") === 4L,
+        col("after").withField("turn_idx", lit(null).cast("int"))).otherwise(col("after")))
+    val outDir = tmpDir("nullkeys")
+    CdcPipeline.processBatch(new ExactlyOnceSink(spark, outDir), evs, 0L)
+    val got = CdcPipeline.materialize(spark, outDir).collect().toSet
+    assert(got == Set(turn("a", 0, "a0 v2"), turn("b", 1, "b1 v2")))
+    assert(CdcPipeline.materialize(spark, outDir).toDF().where(col("conv_id") === "a")
+      .collect().map(_.getString(3)).toSeq == Seq("a0 v2"))
+  }
+
+  test("a batch replayed after a crash before its manifest rewrites every column, processing_timestamp included") {
+    val tableDir = tmpDir("rptable")
+    val streamDir = tmpDir("rpstream")
+    val outDir = tmpDir("rpout")
+    val ckDir = tmpDir("rpck")
+    val small = cfg.copy(numConvs = 30)
+    TranscriptGen.writeTable(spark, small, tableDir)
+    ChangeStreamReader.deliverChanges(spark, tableDir, streamDir)
+    ChangeStreamReader.spoolSnapshot(spark, tableDir, streamDir)
+    CdcPipeline.start(spark, streamDir, outDir, ckDir, maxFilesPerTrigger = 2).awaitTermination()
+    val sink = new ExactlyOnceSink(spark, outDir)
+    val n = sink.highestCommittedBatchId
+    assert(n >= 1)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dir = s"$outDir/events/batch=$n"
+    def files(): Set[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      var out = Set.empty[String]
+      while (it.hasNext) out += it.next().getPath.getName
+      out.filter(_.endsWith(".parquet"))
+    }
+    def rows() = spark.read.parquet(dir)
+    val first = canon(rows())
+    val firstFiles = files()
+
+    // the crash: batch n wrote its files, but neither the sink manifest nor
+    // the checkpoint's commit entry made it
+    assert(fs.delete(new org.apache.hadoop.fs.Path(f"$outDir/_manifest/batch-$n%09d.json"), false))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$ckDir/commits/$n"), false))
+    assert(!sink.isCommitted(n))
+    CdcPipeline.start(spark, streamDir, outDir, ckDir, maxFilesPerTrigger = 2).awaitTermination()
+    assert(sink.isCommitted(n) && sink.highestCommittedBatchId == n)
+    assert(files() != firstFiles, "the restart must have rewritten batch n")
+    assert(canon(rows()) == first, "the replayed batch must commit the same rows")
+
+    val offsets = graft.util.FsText.readText(fs, new org.apache.hadoop.fs.Path(s"$ckDir/offsets/$n"))
+    val batchTs = "\"batchTimestampMs\":(\\d+)".r.findFirstMatchIn(offsets).get.group(1).toLong
+    val stamps = rows().select(col("processing_timestamp")).distinct().collect().map(_.getTimestamp(0))
+    assert(stamps.toSeq == Seq(new java.sql.Timestamp(batchTs)),
+      s"batch $n must carry its offset-log timestamp $batchTs: ${stamps.mkString(",")}")
   }
 }

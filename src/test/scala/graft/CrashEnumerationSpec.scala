@@ -117,10 +117,16 @@ class CrashEnumerationSpec extends SparkSpec {
   private val cfg = GenConfig(numConvs = 8, avgTurns = 4, seed = 11L, changeFiles = 2,
     malformedFrac = 0.2, schemaChangeFrac = 0.2, longGapProb = 0.3)
 
-  /** Batch i: the generator's phase i−1 (batch 0 = the snapshot reads). */
+  /** Batch i: the generator's phase i−1 (batch 0 = the snapshot reads),
+    * stamped with a fixed `processing_timestamp` as the streaming pipeline
+    * stamps each batch from its offset log, so a rerun rewrites every
+    * column.
+    */
   private lazy val cdcBatches: Seq[DataFrame] = {
     val ev = TranscriptGen.events(spark, cfg).toDF()
-    (-1 to 1).map(p => ev.where(col("phase") === p).select(col("event.*")).localCheckpoint())
+    (-1 to 1).map(p => ev.where(col("phase") === p).select(col("event.*"))
+      .withColumn("processing_timestamp", lit(new Timestamp(1700000000000L + p)))
+      .localCheckpoint())
   }
 
   private def sinkView(dir: String) = {
@@ -129,9 +135,7 @@ class CrashEnumerationSpec extends SparkSpec {
     val live = sink.committedBatchIds
     val manifests = (live.map(b => f"batch-$b%09d.json") ++ floor.map(c => f"epoch-$c%09d.json"))
       .map(n => graft.util.FsText.readText(fs, new Path(s"$dir/_manifest/$n")))
-    // processing_timestamp is the wall clock of the write that committed
-    (floor, live, manifests,
-      sink.readCommitted("events").map(df => canon(df.drop("processing_timestamp"))).getOrElse(Nil))
+    (floor, live, manifests, sink.readCommitted("events").map(canon).getOrElse(Nil))
   }
 
   private def sinkDirs(dir: String): Seq[String] = {

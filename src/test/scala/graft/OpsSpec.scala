@@ -417,7 +417,7 @@ class OpsSpec extends SparkSpec {
     // drift would silently invalidate the q17/q42/q47/q53/q56 oracles
     assertSameRows(
       docs.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q")),
-      docs.select(col("doc_id"), TextAnalysis.qualityScoreExpr(col("text")).as("q")),
+      docs.select(col("doc_id"), LegacyKernels.qualityScoreExpr(col("text")).as("q")),
       "quality_score kernel")
   }
 
@@ -432,7 +432,7 @@ class OpsSpec extends SparkSpec {
     assertSameRows(kernelSpans, legacySpans, "span_fps kernel")
     val bands = 32
     val rowsPerBand = 2
-    val sig = Dedup.minhashSignatures(Dedup.grams(docs, 3), bands * rowsPerBand)
+    val sig = LegacyKernels.minhashSignatures(Dedup.grams(docs, 3), bands * rowsPerBand)
     val legacyBanded = sig.select(col("id"),
         explode(array((0 until bands).map { b =>
           struct(lit(b).as("band"),
