@@ -52,6 +52,19 @@ object ClusterCheck {
     ordered.collect().map(_.mkString("|")).toSeq.sorted
   }
 
+  /** Write `df` as the single parquet file `<base>/stream/<name>.parquet`:
+    * one file per trigger for a stream read with maxFilesPerTrigger = 1.
+    */
+  private def streamFile(df: org.apache.spark.sql.DataFrame, base: String, name: String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(df.sparkSession.sparkContext.hadoopConfiguration)
+    val tmp = s"$base/.tmp-$name"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/stream"))
+    fs.rename(part, new org.apache.hadoop.fs.Path(s"$base/stream/$name.parquet"))
+    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, localOut) = args
     val spark = GraftSession.cluster(2, 2, 3072, "graft-clustercheck")
@@ -114,15 +127,9 @@ object ClusterCheck {
         .where(col("doc_id") < 300)
       val known = docs.where(col("doc_id") % 50 === 0)
         .select(graft.ops.TextAnalysis.scrub(col("text")).as("text"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       Seq("f1" -> docs.where(col("doc_id") < 150),
           "f2" -> docs.where(col("doc_id") >= 150)).foreach { case (name, df) =>
-        val tmp = s"$base/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/stream"))
-        fs.rename(part, new org.apache.hadoop.fs.Path(s"$base/stream/$name.parquet"))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        streamFile(df, base, name)
       }
       graft.pipeline.CorpusIngest.start(spark, s"$base/stream", docs.schema,
         known, s"$base/out", s"$base/ck", minQuality = 0.5,
@@ -158,15 +165,9 @@ object ClusterCheck {
         .select(col("user_id"), col("ts").cast("timestamp").as("ts"), col("event_id"),
           when(col("event_id") % 17 === 0, lit("D")).otherwise(lit("U")).as("op"),
           col("event_type").as("grp"), (col("event_id") % 997).as("v"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       Seq("f1" -> ch.where(col("user_id") % 2 === 0),
           "f2" -> ch.where(col("user_id") % 2 === 1)).foreach { case (name, df) =>
-        val tmp = s"$base/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/stream"))
-        fs.rename(part, new org.apache.hadoop.fs.Path(s"$base/stream/$name.parquet"))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        streamFile(df, base, name)
       }
       graft.pipeline.MaterializedView.start(spark, s"$base/stream", ch.schema,
         s"$base/view", s"$base/ck1", nBuckets = 8).awaitTermination()
@@ -199,8 +200,50 @@ object ClusterCheck {
         false
     }
     if (!viewOk) failed += 1
+    // Stream-stream join under separate executor JVMs: the watermarked
+    // tool-call/response join over two turn files, its state in one RocksDB
+    // store per partition (virtual column families, join state format v3),
+    // compared row for row with the batch join of the same turns.
+    val joinOk = try {
+      import spark.implicits._
+      val base = s"/tmp/graft-clustercheck-join-${System.nanoTime()}"
+      val cfg = graft.source.TranscriptGen.GenConfig(numConvs = 120, avgTurns = 15, seed = 11L)
+      // split on event time, so no row of the second file is late against
+      // the watermark the first one leaves
+      val turns = graft.source.TranscriptGen.events(spark, cfg)
+        .filter(_.event.op.exists(o => o == "r" || o == "c")).map(_.event.after.get)
+        .collect().toSeq
+      val (first, second) = turns.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+        .splitAt(turns.size / 2)
+      Seq("f1" -> first, "f2" -> second).foreach { case (name, rows) =>
+        streamFile(spark.createDataset(rows).toDF(), base, name)
+      }
+      val schema = org.apache.spark.sql.Encoders.product[graft.model.Turn].schema
+      val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$base/stream")
+      val q = graft.pipeline.Joins.toolCallResponse(stream, "10 minutes", Some("30 seconds"))
+        .writeStream.outputMode("append").format("memory").queryName("clustercheck_tool_join")
+        .option("checkpointLocation", s"$base/ck").start()
+      q.processAllAvailable(); q.stop()
+      val stores = q.recentProgress.flatMap(_.stateOperators).map(_.numStateStoreInstances)
+        .distinct.toSeq
+      val got = canon(spark.table("clustercheck_tool_join"))
+      val want = canon(graft.pipeline.Joins.toolCallResponse(
+        spark.createDataset(turns).toDF(), "10 minutes"))
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+      val ok = got == want && got.nonEmpty && stores == Seq(partitions)
+      println(s"[clustercheck] tool_join ${if (ok) "OK" else "MISMATCH"} rows=${got.size} " +
+        s"stores=${stores.mkString(",")}")
+      ok
+    } catch {
+      case e: Throwable =>
+        println(s"[clustercheck] tool_join FAILED ${e.getClass.getSimpleName}: " +
+          s"${Option(e.getMessage).getOrElse("").take(160)}")
+        false
+    }
+    if (!joinOk) failed += 1
     spark.stop()
-    println(s"[clustercheck] ${Subset.size + 3 - failed}/${Subset.size + 3} equal to local-mode/oracle")
+    println(s"[clustercheck] ${Subset.size + 4 - failed}/${Subset.size + 4} equal to local-mode/oracle")
     if (failed > 0) sys.exit(3)
   }
 }

@@ -187,11 +187,22 @@ object LatencyMonitor {
   private val oncePerPipeline =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Entries `history` and `alerts` each keep: the newest ones, so a
+    * continuous pipeline (one `history` entry per batch, and one alert per
+    * batch through a deep replay) holds a bounded window, not its lifetime.
+    */
+  val Retained = 1024
+
   // JVM-shared queues; every entry is keyed by `pipeline` so concurrent
   // pipelines in one JVM (tests, multi-stream drivers) can audit their own
   // batches — filter on it, and prefer clear(pipeline) over the global one
   val history = new ConcurrentLinkedQueue[LatencyStats]()
   val alerts = new ConcurrentLinkedQueue[LatencyStats]()
+
+  private def retain(q: ConcurrentLinkedQueue[LatencyStats], st: LatencyStats): Unit = {
+    q.add(st)
+    while (q.size > Retained) q.poll()
+  }
 
   def clear(): Unit = { history.clear(); alerts.clear(); oncePerPipeline.clear() }
 
@@ -211,11 +222,11 @@ object LatencyMonitor {
       pipeline: String = "default",
       historicalCutoffMs: Long = HistoricalCutoffMs): LatencyStats = {
     val st = LatencyStats(batchId, maxLatencyMs, avgLatencyMs, lateEvents, events, pipeline)
-    history.add(st)
+    retain(history, st)
     if (st.lateEvents > 0) {
       val log = org.apache.log4j.Logger.getLogger(getClass)
       def alertLoud(): Unit = {
-        alerts.add(st)
+        retain(alerts, st)
         log.warn(
           f"[latency] batch=$batchId ${st.lateEvents} of ${st.events} events over ${alertMs}ms " +
             f"(max=${st.maxLatencyMs}ms avg=${st.avgLatencyMs}%.0fms)")
@@ -232,7 +243,7 @@ object LatencyMonitor {
           // >6 h behind looks identical and MUST page — keep the alert (the
           // pager signal is `alerts`), rate-limit the log to one warn per
           // pipeline so a months-deep backfill can't drown the logs
-          alerts.add(st)
+          retain(alerts, st)
           if (oncePerPipeline.add(s"ambiguous-replay:$pipeline"))
             log.warn(
               f"[latency] pipeline=$pipeline avg latency ${st.avgLatencyMs}%.0fms exceeds " +

@@ -24,27 +24,14 @@ object Joins {
 
   /** Join each assistant tool-call with its tool response(s) in
     * (call.ts, call.ts + horizon]. `watermark` is required for streaming
-    * (state eviction); None gives the identical batch semantics.
+    * (state eviction); None gives the identical batch semantics. In
+    * streaming the join keeps one RocksDB state store per shuffle partition
+    * (join state format v3, set in `GraftSession`), both sides' buffers in
+    * virtual column families of that one store.
     */
   def toolCallResponse(turns: DataFrame, horizon: String = "10 minutes",
-      watermark: Option[String] = None): DataFrame = {
-    def wm(df: DataFrame): DataFrame = watermark.fold(df)(w => df.withWatermark("ts", w))
-    val calls = wm(turns.where(col("role") === "assistant" && col("tool").isNotNull))
-      .select(col("conv_id"), col("turn_idx").as("call_idx"),
-        col("tool"), col("ts").as("call_ts"))
-    val resps = wm(turns.where(col("role") === "tool" && col("tool").isNotNull))
-      .select(col("conv_id").as("r_conv_id"), col("turn_idx").as("resp_idx"),
-        col("tool").as("r_tool"), col("ts").as("resp_ts"))
-    calls.join(
-      resps,
-      col("conv_id") === col("r_conv_id") && col("tool") === col("r_tool") &&
-        col("resp_ts") > col("call_ts") &&
-        col("resp_ts") <= col("call_ts") + expr(s"interval $horizon"),
-      "inner"
-    ).select(col("conv_id"), col("tool"), col("call_idx"), col("resp_idx"),
-      col("call_ts"), col("resp_ts"),
-      (unix_millis(col("resp_ts")) - unix_millis(col("call_ts"))).as("latency_ms"))
-  }
+      watermark: Option[String] = None): DataFrame =
+    toolCallJoin(turns, horizon, watermark, "inner")
 
   /** LEFT-OUTER variant of `toolCallResponse`: every tool call, matched
     * responses as in the inner join, UNMATCHED calls emitted with null
@@ -61,6 +48,11 @@ object Joins {
     require(turns.isStreaming == false || watermark.isDefined,
       "outer stream-stream join requires a watermark on both sides " +
         "(state cannot be released without one)")
+    toolCallJoin(turns, horizon, watermark, "left_outer")
+  }
+
+  private def toolCallJoin(turns: DataFrame, horizon: String,
+      watermark: Option[String], joinType: String): DataFrame = {
     def wm(df: DataFrame): DataFrame = watermark.fold(df)(w => df.withWatermark("ts", w))
     val calls = wm(turns.where(col("role") === "assistant" && col("tool").isNotNull))
       .select(col("conv_id"), col("turn_idx").as("call_idx"),
@@ -73,7 +65,7 @@ object Joins {
       col("conv_id") === col("r_conv_id") && col("tool") === col("r_tool") &&
         col("resp_ts") > col("call_ts") &&
         col("resp_ts") <= col("call_ts") + expr(s"interval $horizon"),
-      "left_outer"
+      joinType
     ).select(col("conv_id"), col("tool"), col("call_idx"), col("resp_idx"),
       col("call_ts"), col("resp_ts"),
       (unix_millis(col("resp_ts")) - unix_millis(col("call_ts"))).as("latency_ms"))

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.Turn
 import graft.pipeline.{Cep, Joins, Windows}
@@ -32,10 +33,26 @@ class EventTimeSpec extends SparkSpec {
     spark.readStream.schema(turnSchema).option("maxFilesPerTrigger", mft).parquet(dir)
 
   private def runToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    q.processAllAvailable(); q.stop()
+    drainToMemory(df, name, mode)
     spark.table(name)
   }
+
+  /** Run `df` into memory table `name` until the input is drained, then
+    * stop; the stopped query still carries its progress reports.
+    */
+  private def drainToMemory(df: DataFrame, name: String, mode: String): StreamingQuery = {
+    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    q.processAllAvailable(); q.stop()
+    q
+  }
+
+  /** State store instances each stateful operator reported, over every
+    * progress report of `q`.
+    */
+  private def storeInstances(q: StreamingQuery): Seq[Long] =
+    q.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numStateStoreInstances)
+
+  private val JoinStateFormat = "spark.sql.streaming.join.stateFormatVersion"
 
   private def genTurns(cfg: GenConfig): DataFrame = {
     import spark.implicits._
@@ -390,12 +407,64 @@ class EventTimeSpec extends SparkSpec {
     val (a, b) = collected.splitAt(collected.size / 2)
     writeTurnFile(dir, "b1", a)
     writeTurnFile(dir, "b2", b)
-    val got = runToMemory(
+    val q = drainToMemory(
       Joins.toolCallResponse(streamTurns(dir, 1), "10 minutes", Some("30 seconds")),
       "join_s", "append")
     val want = Joins.toolCallResponse(batchTurns, "10 minutes")
-    assertSameRows(got, want, "stream-stream join")
+    assertSameRows(spark.table("join_s"), want, "stream-stream join")
     assert(want.count() > 0)
+    // join state format v3 (the engine default): one store per shuffle
+    // partition; the v2 format would report four per partition
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val stores = storeInstances(q)
+    assert(stores.nonEmpty && stores.forall(_ == partitions),
+      s"join state stores per batch $stores, want $partitions (one per partition)")
+  }
+
+  test("a join checkpoint written under state format v2 resumes on v2") {
+    val cfg = GenConfig(numConvs = 80, avgTurns = 15, seed = 7)
+    val batchTurns = genTurns(cfg)
+    val dir = tmpDir("v2join")
+    val out = tmpDir("v2join-out")
+    val ck = tmpDir("v2join-ck")
+    val collected = batchTurns.collect().map(r =>
+      Turn(r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
+        Option(r.getString(4)), r.getTimestamp(5))).toSeq
+    // split on event time: the first run ends with a no-data batch that
+    // moves the watermark, so a second file reaching back below it would
+    // lose rows as late on any resume, whatever the state format
+    val (a, b) = collected.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+      .splitAt(collected.size / 2)
+    // a file sink, not memory: the memory sink cannot resume a checkpoint
+    def drainJoin(): StreamingQuery = {
+      val q = Joins.toolCallResponse(streamTurns(dir, 1), "10 minutes", Some("30 seconds"))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ck).start()
+      q.processAllAvailable(); q.stop()
+      q
+    }
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    writeTurnFile(dir, "b1", a)
+    // suites share one session: set the old format for the first run only
+    val default = spark.conf.get(JoinStateFormat)
+    val firstStores =
+      try {
+        spark.conf.set(JoinStateFormat, "2")
+        storeInstances(drainJoin())
+      } finally spark.conf.set(JoinStateFormat, default)
+    assert(default == "3")
+    assert(firstStores.nonEmpty && firstStores.forall(_ == 4 * partitions),
+      s"v2 run: stores per batch $firstStores, want ${4 * partitions}")
+    val firstRows = spark.read.parquet(out).count()
+    // restart on the same checkpoint under the v3 default: the offset log
+    // carries format 2, so the resumed query must keep its four stores
+    writeTurnFile(dir, "b2", b)
+    val stores = storeInstances(drainJoin())
+    assert(stores.nonEmpty && stores.forall(_ == 4 * partitions),
+      s"resumed run: stores per batch $stores, want ${4 * partitions} (format 2 kept)")
+    val want = Joins.toolCallResponse(batchTurns, "10 minutes")
+    assertSameRows(spark.read.parquet(out), want, "v2 checkpoint resumed")
+    assert(firstRows > 0 && want.count() > firstRows)
   }
 
   test("outer tool-call join: timed-out calls emit nulls; streaming == batch") {

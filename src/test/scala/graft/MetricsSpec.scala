@@ -95,6 +95,28 @@ class MetricsSpec extends SparkSpec {
     } finally { sys.props.remove("graft.replayMode"); () }
   }
 
+  test("latency history and alerts keep only the newest entries") {
+    import graft.metrics.LatencyMonitor
+    LatencyMonitor.clear()
+    val n = LatencyMonitor.Retained
+    val k = 37
+    // every batch is late past the replay ceiling: one history entry and
+    // one alert each, the shape of a deep replay in a continuous pipeline
+    (1 to n + k).foreach { b =>
+      LatencyMonitor.record(b.toLong, 30000, 30000.0, 1, 1,
+        pipeline = "bounded", historicalCutoffMs = 1000L)
+    }
+    try {
+      assert(LatencyMonitor.history.size() == n)
+      assert(LatencyMonitor.alerts.size() == n)
+      val kept = (k + 1 to n + k).map(_.toLong)
+      assert(LatencyMonitor.history.toArray.toSeq
+        .map(_.asInstanceOf[LatencyMonitor.LatencyStats].batchId) == kept)
+      assert(LatencyMonitor.alerts.toArray.toSeq
+        .map(_.asInstanceOf[LatencyMonitor.LatencyStats].batchId) == kept)
+    } finally LatencyMonitor.clear("bounded")
+  }
+
   test("debug taps are pass-through observers with exact accumulator counts") {
     import spark.implicits._
     val df = (0 until 500).map(i => (i.toLong, s"event-$i", "x" * 300))
