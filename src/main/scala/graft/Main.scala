@@ -46,7 +46,6 @@ object Main {
         System.err.println(s"[pipeline] environment error: $err"); sys.exit(2)
       case Right(_) =>
     }
-    sys.props("graft.latencyAlertMs") = cfg.latencyAlertMs.toString
     val streamDir = s"${cfg.workDir}/stream"
     val outDir = s"${cfg.workDir}/out"
     ChangeStreamReader.deliverChanges(spark, cfg.tableDir, streamDir)
@@ -61,7 +60,8 @@ object Main {
         trigger = CdcPipeline.triggerFor(cfg), tables = cfg.tables,
         maxRecordsPerFile = cfg.sinkMaxRecordsPerFile,
         compactEvery = cfg.compactEveryBatches,
-        rollingFileSizeBytes = cfg.rollingFileSizeBytes),
+        rollingFileSizeBytes = cfg.rollingFileSizeBytes,
+        alertMs = cfg.latencyAlertMs),
       cfg.restartAttempts, cfg.restartDelayMs,
       // monotone under compaction — the live manifest COUNT shrinks when an
       // epoch retires batches, which would mask real progress (see

@@ -12,8 +12,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * reference itself concedes is wrong under parallelism > 1; SURVEY.md §7.5).
   *
   * Attach once per session; progress events arrive on the listener bus
-  * (no data-plane cost). `summary()` gives cumulative counts; `events`
-  * retains the per-batch history for lineage-vs-progress audits.
+  * (no data-plane cost). `summary()` and `totalRows` count every batch
+  * since attach; `events` keeps the newest `LatencyMonitor.Retained`
+  * batches for lineage-vs-progress audits, so a continuous pipeline holds
+  * a bounded window, not its lifetime.
   */
 final class GraftQueryListener extends StreamingQueryListener {
 
@@ -26,16 +28,19 @@ final class GraftQueryListener extends StreamingQueryListener {
   @volatile var started = 0
   @volatile var terminated = 0
   @volatile var errors = 0
+  @volatile private var batches = 0L
+  @volatile private var rows = 0L
 
   override def onQueryStarted(e: QueryStartedEvent): Unit = started += 1
 
   override def onQueryProgress(e: QueryProgressEvent): Unit = {
     val p = e.progress
-    events.add(BatchMetrics(
+    LatencyMonitor.retain(events, BatchMetrics(
       Option(p.name).getOrElse(""), p.batchId, p.numInputRows,
       p.inputRowsPerSecond, p.processedRowsPerSecond,
       p.batchDuration, Option(p.eventTime.get("watermark")).getOrElse("")))
-    ()
+    batches += 1
+    rows += p.numInputRows
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
@@ -43,16 +48,10 @@ final class GraftQueryListener extends StreamingQueryListener {
     if (e.exception.isDefined) errors += 1
   }
 
-  def totalRows: Long = {
-    var s = 0L
-    events.forEach(b => s += b.numInputRows)
-    s
-  }
+  def totalRows: Long = rows
 
-  def summary(): String = {
-    val n = events.size()
-    f"batches=$n rows=$totalRows started=$started terminated=$terminated errors=$errors"
-  }
+  def summary(): String =
+    f"batches=$batches rows=$rows started=$started terminated=$terminated errors=$errors"
 }
 
 object Metrics {
@@ -187,9 +186,10 @@ object LatencyMonitor {
   private val oncePerPipeline =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Entries `history` and `alerts` each keep: the newest ones, so a
-    * continuous pipeline (one `history` entry per batch, and one alert per
-    * batch through a deep replay) holds a bounded window, not its lifetime.
+  /** Entries `history`, `alerts` and each `GraftQueryListener.events`
+    * keep: the newest ones, so a continuous pipeline (one `history` entry
+    * and one listener event per batch, and one alert per batch through a
+    * deep replay) holds a bounded window, not its lifetime.
     */
   val Retained = 1024
 
@@ -199,8 +199,8 @@ object LatencyMonitor {
   val history = new ConcurrentLinkedQueue[LatencyStats]()
   val alerts = new ConcurrentLinkedQueue[LatencyStats]()
 
-  private def retain(q: ConcurrentLinkedQueue[LatencyStats], st: LatencyStats): Unit = {
-    q.add(st)
+  private[metrics] def retain[T](q: ConcurrentLinkedQueue[T], x: T): Unit = {
+    q.add(x)
     while (q.size > Retained) q.poll()
   }
 

@@ -29,13 +29,13 @@ object CdcPipeline {
     * (reference CDCMonitor's 10 s warn), then its exact counts lay out the
     * sink's single shuffle. Both passes read the routed rows computed once
     * (`ExactlyOnceSink.computedOnce`). A replayed batchId is a no-op.
+    * `alertMs` is the source-latency alert threshold; 0 records no stats.
     */
   def processBatch(sink: ExactlyOnceSink, batch: DataFrame, batchId: Long,
-      tables: Seq[String] = Nil): Unit = {
+      tables: Seq[String] = Nil,
+      alertMs: Long = graft.metrics.LatencyMonitor.DefaultAlertMs): Unit = {
     if (sink.isCommitted(batchId)) return
     ExactlyOnceSink.computedOnce(tableFiltered(routed(batch), tables)) { keyed =>
-      val alertMs = sys.props.get("graft.latencyAlertMs").map(_.toLong)
-        .getOrElse(graft.metrics.LatencyMonitor.DefaultAlertMs)
       val nowMs = System.currentTimeMillis()
       var t0 = System.nanoTime()
       val lat = lit(nowMs) - col("source.ts_ms")
@@ -101,7 +101,8 @@ object CdcPipeline {
       trigger: Trigger = Trigger.AvailableNow(),
       format: String = "parquet", tables: Seq[String] = Nil,
       maxRecordsPerFile: Long = 0L, compactEvery: Long = 0L,
-      rollingFileSizeBytes: Long = 0L): StreamingQuery = {
+      rollingFileSizeBytes: Long = 0L,
+      alertMs: Long = graft.metrics.LatencyMonitor.DefaultAlertMs): StreamingQuery = {
     val sink = new ExactlyOnceSink(spark, outDir, maxRecordsPerFile, rollingFileSizeBytes)
     val src = format match {
       case "parquet" => ChangeStreamReader.stream(spark, streamDir, maxFilesPerTrigger)
@@ -117,7 +118,7 @@ object CdcPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        processBatch(sink, df, id, tables)
+        processBatch(sink, df, id, tables, alertMs)
         // periodic log compaction at the trigger boundary — the one point
         // with no concurrent sink readers in the pipeline itself — keeps
         // manifest/file counts bounded on a continuous deployment

@@ -2,10 +2,11 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stream-stream stateful joins over the turn stream (north-rule: assistant
   * tool-calls ⋈ tool responses; the reference has no joins at all —
@@ -126,106 +127,59 @@ object Joins {
       payload: String, matched_ts: Option[Timestamp], matched_tie: Option[Long],
       matched_payload: Option[String])
 
-  final case class AsOfRec(tsMs: Long, tie: Long, payload: String)
-
-  /** Per-key state: the latest right row at-or-below the emitted frontier
-    * (O(1) forever) plus the not-yet-ripe arrivals above it (bounded by the
-    * watermark delay × per-key event rate).
+  /** A buffered event of either side, its time in microseconds. Checkpoints
+    * written when this record held milliseconds (`tsMs`) and each side had
+    * its own buffer do not resume; only tests drive this operator.
     */
-  final case class AsOfState(lastRight: Option[AsOfRec],
-      pendingLeft: Vector[AsOfRec], pendingRight: Vector[AsOfRec],
+  final case class AsOfRec(tsUs: Long, tie: Long, isLeft: Boolean, payload: String)
+
+  /** Per-key state: the latest sealed right row (O(1) forever), the
+    * not-yet-sealed arrivals of both sides (bounded by the watermark delay
+    * × per-key event rate), and the watermark at the key's last call — its
+    * activity clock for the idle TTL.
+    */
+  final case class AsOfState(lastRight: Option[AsOfRec], pending: Seq[AsOfRec],
       frontierMs: Long)
 
-  private val emptyAsOf = AsOfState(None, Vector.empty, Vector.empty, Long.MinValue)
-
-  private def asOfProcess(k: String, it: Iterator[AsOfEvent],
-      state: GroupState[AsOfState], streaming: Boolean, strict: Boolean,
-      idleTtlMs: Option[Long])
-      : Iterator[AsOfJoined] = {
-    var s = state.getOption.getOrElse(emptyAsOf)
-    // idle-key expiry: the timeout fired with nothing buffered — remove the
-    // state entirely, so idle keys cost ZERO. Full removal cannot re-emit
-    // on an at-least-once redelivery, because the ENGINE already drops it:
-    // FlatMapGroupsWithStateExec filters input rows older than the
-    // PREVIOUS batch's watermark (verified against this operator — the
-    // redelivery probe in the TTL test never reaches asOfProcess), and an
-    // already-emitted event has ts ≤ the watermark that sealed its
-    // emission ≤ every later watermark. The equality edge (wm parked
-    // exactly at ts) cannot coexist with expiry: removal required wm to
-    // advance ≥ ttl past the emission watermark first.
-    if (state.hasTimedOut && idleTtlMs.isDefined &&
-        s.pendingLeft.isEmpty && s.pendingRight.isEmpty) {
-      state.remove()
-      return Iterator.empty
-    }
-    // data-path expiry: a key whose NEXT arrival lands in the same batch
-    // the TTL elapses never gets its timeout invoked (timeouts only fire
-    // for keys without data — the same starvation the CEP drain fixes), so
-    // the idle window is also checked on arrival: frontierMs is the
-    // watermark at the key's last drain, i.e. its last activity
-    if (streaming) idleTtlMs.foreach { ttl =>
-      if (s.pendingLeft.isEmpty && s.pendingRight.isEmpty &&
-          s.frontierMs > Long.MinValue &&
-          state.getCurrentWatermarkMs() - s.frontierMs >= ttl)
-        s = s.copy(lastRight = None)
-    }
-    // ingest: anything at or below the already-emitted frontier is late
-    // beyond the watermark contract → dropped (same rule as append windows)
-    it.foreach { e =>
-      if (!streaming || e.ts.getTime > s.frontierMs) {
-        val rec = AsOfRec(e.ts.getTime, e.tie, e.payload)
-        s = if (e.isLeft) s.copy(pendingLeft = s.pendingLeft :+ rec)
-            else s.copy(pendingRight = s.pendingRight :+ rec)
+  private final class AsOf(strict: Boolean, idleTtlMs: Option[Long])
+      extends Sealed.Op[String, AsOfEvent, AsOfRec, AsOfState, AsOfJoined] {
+    def empty = AsOfState(None, Vector.empty, Long.MinValue)
+    def buffered(e: AsOfEvent) = AsOfRec(Sealed.micros(e.ts), e.tie, e.isLeft, e.payload)
+    def pending(s: AsOfState) = s.pending
+    def id(r: AsOfRec) = r
+    // the batch asOfJoin window's order: at equal time a right row sorts
+    // before the left (visible to it), or after it under strict <
+    def order(r: AsOfRec) = (r.tsUs, if (r.isLeft) 1 else if (strict) 2 else 0, r.tie)
+    def fold(k: String, s: AsOfState, ripe: Seq[AsOfRec], wait: Seq[AsOfRec],
+        wmMs: Long, out: mutable.Buffer[AsOfJoined]) = {
+      // idle expiry: a key idle for the TTL forgets its right row. The idle
+      // timeout covers a key that sees no data; a key whose next arrival
+      // lands in the batch the TTL elapses is never timed out (timeouts
+      // fire only for keys without data), so the clock is checked here
+      val idle = idleTtlMs.exists(ttl => s.pending.isEmpty &&
+        s.frontierMs > Long.MinValue && wmMs - s.frontierMs >= ttl)
+      var last = if (idle) None else s.lastRight
+      ripe.foreach { r =>
+        if (!r.isLeft) last = Some(r)
+        else out += AsOfJoined(k, Sealed.timestamp(r.tsUs), r.tie, r.payload,
+          last.map(m => Sealed.timestamp(m.tsUs)), last.map(_.tie), last.map(_.payload))
       }
+      AsOfState(last, wait, math.max(s.frontierMs, wmMs))
     }
-    // drain everything the watermark has sealed: no earlier-ts arrival is
-    // possible below it, so matches are final (batch mode seals all input)
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val out = scala.collection.mutable.Buffer[AsOfJoined]()
-    val (ripeL, waitL) = s.pendingLeft.partition(_.tsMs <= wm)
-    val (ripeR, waitR) = s.pendingRight.partition(_.tsMs <= wm)
-    // distinct: an at-least-once upstream may redeliver an event inside the
-    // watermark window — identical (ts, tie, payload) records collapse so
-    // replay cannot double-emit a match (redelivery BELOW the frontier is
-    // already dropped at ingest)
-    val ls = ripeL.distinct.sortBy(r => (r.tsMs, r.tie))
-    val rs = ripeR.distinct.sortBy(r => (r.tsMs, r.tie))
-    var last = s.lastRight
-    var j = 0
-    ls.foreach { l =>
-      while (j < rs.length &&
-          (if (strict) rs(j).tsMs < l.tsMs else rs(j).tsMs <= l.tsMs)) {
-        last = Some(rs(j)); j += 1
-      }
-      out += AsOfJoined(k, new Timestamp(l.tsMs), l.tie, l.payload,
-        last.map(r => new Timestamp(r.tsMs)), last.map(_.tie), last.map(_.payload))
-    }
-    while (j < rs.length) { last = Some(rs(j)); j += 1 }
-    s = s.copy(lastRight = last, pendingLeft = waitL, pendingRight = waitR,
-      frontierMs = math.max(s.frontierMs, wm))
-    state.update(s)
-    if (streaming) {
-      if (waitL.nonEmpty || waitR.nonEmpty) {
-        val minPending = (waitL ++ waitR).iterator.map(_.tsMs).min
-        state.setTimeoutTimestamp(math.max(minPending, wm + 1))
-      } else idleTtlMs.foreach { ttl =>
-        // nothing buffered: arm the idle clock — fires only if the key sees
-        // no arrivals until the watermark passes (wm + ttl), at which point
-        // the retained right row is removed (top of this method)
-        state.setTimeoutTimestamp(math.max(wm, 0L) + ttl)
-      }
-    }
-    out.iterator
+    // a key with no right row and nothing pending holds nothing: removing
+    // it is how an expired key costs zero state
+    override def disposable(s: AsOfState) = s.lastRight.isEmpty
+    override def idleTimeoutMs(wmMs: Long) = idleTtlMs.map(math.max(wmMs, 0L) + _)
   }
 
   /** Streaming as-of join — the event-time-correct twin of `asOfJoin`,
     * Flink's "temporal join" recast on `flatMapGroupsWithState`. Each left
     * event is matched against the latest right event at-or-before its
-    * timestamp (`strict=true` → strictly before) and EMITTED ONLY once the
-    * watermark passes its timestamp, so out-of-order arrival within the
-    * watermark delay cannot change a result that was already emitted:
-    * streaming output == batch `asOfJoin` on the same sealed input
-    * (EventTimeSpec pins this).
+    * timestamp (`strict=true` → strictly before) and EMITTED ONLY once it
+    * seals (`Sealed`: both sides share one buffer, a redelivery collapses on
+    * the whole record), so out-of-order arrival within the watermark delay
+    * cannot change a result that was already emitted: streaming output ==
+    * batch `asOfJoin` on the same sealed input (EventTimeSpec pins this).
     *
     * Scale: per-key state is ONE retained right row plus the unripe buffer
     * (watermark-delay-bounded); parallelism is #keys, the same sharding as
@@ -251,21 +205,14 @@ object Joins {
     */
   def asOfJoinStream(events: Dataset[AsOfEvent], streaming: Boolean = true,
       strict: Boolean = false, idleTtlMs: Option[Long] = None): Dataset[AsOfJoined] = {
-    // ttl <= 0 would arm setTimeoutTimestamp(wm + ttl) at-or-below the
+    // ttl <= 0 would arm the idle timeout (wm + ttl) at-or-below the
     // current watermark — a runtime query failure — and make the data-path
     // check expire keys instantly; reject it at plan time, loudly
     require(idleTtlMs.forall(_ > 0),
       s"idleTtlMs must be positive event-time millis, got $idleTtlMs")
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[AsOfState, AsOfJoined](OutputMode.Append, timeoutConf) {
-        (k, it, state) =>
-          if (state.hasTimedOut) asOfProcess(k, Iterator.empty, state, streaming, strict, idleTtlMs)
-          else asOfProcess(k, it, state, streaming, strict, idleTtlMs)
-      }
+    Sealed.run(events.groupByKey(_.k), streaming, new AsOf(strict, idleTtlMs))
   }
 
   /** Stream-static dedup: drop streaming records whose content already

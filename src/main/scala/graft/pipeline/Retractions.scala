@@ -2,10 +2,11 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Continuously-maintained per-group aggregates over a keyed
   * upsert/delete changelog — the dynamic-table / RETRACT-STREAM semantic
@@ -23,8 +24,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Streaming: `flatMapGroupsWithState` keyed by the entity key, holding
   * the key's CURRENT (group, value) plus the unripe (above-watermark)
-  * arrivals. Each change, once sealed by the watermark and ordered by
-  * (ts, tie), emits up to two deltas: a retraction `(old_group, -1, -old_v)`
+  * arrivals. Each change, once sealed and ordered by (ts, tie) under the
+  * `Sealed` policy, emits up to two deltas: a retraction `(old_group, -1, -old_v)`
   * for the row it replaces and an insertion `(new_group, +1, +v)` unless
   * it is a delete. Folding the deltas per group (sum of d_keys / d_sum)
   * reproduces the batch aggregate at every watermark frontier — the
@@ -35,8 +36,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Design for scale:
   *   - State per key is O(1) (the current row) + the unripe buffer, which
-  *     is bounded by watermark delay × per-key change rate and drains
-  *     every trigger — the same bound as the as-of join / SCD2 buffers.
+  *     is bounded by watermark delay × per-key change rate — the same
+  *     bound as the as-of join / SCD2 buffers.
   *   - Deltas are append-only and replayable into the exactly-once sink;
   *     the per-group fold is a downstream hash aggregate on the tiny
   *     group domain (or a `groupBy` in update mode over the sink).
@@ -82,12 +83,7 @@ object Retractions {
     * order every other keyed stage uses.
     */
   final case class ChangeEvent(k: Long, ts: Timestamp, tie: Long, op: String,
-      grp: String, v: Long) {
-    def tsMs: Long = ts.getTime
-    // getTime already includes the integral-millisecond part of nanos;
-    // only the sub-millisecond remainder is added back for exact micros
-    def tsUs: Long = ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
-  }
+      grp: String, v: Long)
 
   /** One retraction delta. Fold per `grp` (sum d_keys, sum d_sum); groups
     * folding to d_keys == 0 hold no current keys and are absent from the
@@ -96,7 +92,9 @@ object Retractions {
   final case class AggDelta(grp: String, d_keys: Long, d_sum: Long)
 
   /** Compact change kept in the unripe buffer: primitives only — the
-    * payload the deltas need, nothing else enters state.
+    * payload the deltas need, nothing else enters state. `tsMs` is no
+    * longer read; it stays so that `MaterializedView` checkpoints, which
+    * hold this record, resume.
     */
   final case class Chg(tsUs: Long, tsMs: Long, tie: Long, del: Boolean,
       grp: String, v: Long)
@@ -108,63 +106,45 @@ object Retractions {
   final case class RetractState(hasCur: Boolean, curGrp: String, curV: Long,
       pending: Seq[Chg])
 
-  private def emptyState = RetractState(hasCur = false, "", 0L, Vector.empty)
+  /** The buffer both per-entity streams share: redeliveries collapse by
+    * `tie`. `RetractState`, `RowState` and `Chg` keep their field names and
+    * types, so `MaterializedView` checkpoints resume.
+    */
+  private abstract class Changes[S, O] extends Sealed.Op[Long, ChangeEvent, Chg, S, O] {
+    def buffered(e: ChangeEvent) =
+      Chg(Sealed.micros(e.ts), e.ts.getTime, e.tie, e.op == "D", e.grp, e.v)
+    def id(c: Chg) = c.tie
+    def order(c: Chg) = (c.tsUs, 0, c.tie)
+  }
 
-  private def process(it: Iterator[ChangeEvent], state: GroupState[RetractState],
-      streaming: Boolean): Iterator[AggDelta] = {
-    var s = state.getOption.getOrElse(emptyState)
-    if (!(streaming && state.hasTimedOut)) {
-      // at-least-once delivery: a redelivered change still inside the
-      // watermark window arrives before the original drains — dedup the
-      // buffer by tie so it can't apply twice. (A redelivery of an
-      // already-drained change is older than the watermark by definition
-      // and Spark's watermark filter drops it before this operator.)
-      val have = s.pending.iterator.map(_.tie).toSet
-      val fresh = it.map(e => Chg(e.tsUs, e.tsMs, e.tie, e.op == "D", e.grp, e.v))
-        .filterNot(c => have(c.tie)).toSeq.distinctBy(_.tie)
-      s = s.copy(pending = s.pending ++ fresh)
-    }
-    // batch input is complete: everything is ripe by definition. Streaming
-    // seals strictly below the watermark — a same-timestamp sibling with a
-    // smaller tie could still arrive at the boundary.
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = scala.collection.mutable.Buffer[AggDelta]()
-    if (ripe.nonEmpty) {
+  private object Retract extends Changes[RetractState, AggDelta] {
+    def empty = RetractState(hasCur = false, "", 0L, Vector.empty)
+    def pending(s: RetractState) = s.pending
+    def fold(k: Long, s: RetractState, ripe: Seq[Chg], wait: Seq[Chg], wmMs: Long,
+        out: mutable.Buffer[AggDelta]) = {
       var hasCur = s.hasCur
       var curGrp = s.curGrp
       var curV = s.curV
-      ripe.sortBy(c => (c.tsUs, c.tie)).foreach { c =>
+      ripe.foreach { c =>
         if (hasCur) out += AggDelta(curGrp, -1L, -curV)
         if (c.del) { hasCur = false; curGrp = ""; curV = 0L }
         else { hasCur = true; curGrp = c.grp; curV = c.v; out += AggDelta(c.grp, 1L, c.v) }
       }
-      s = RetractState(hasCur, curGrp, curV, wait)
+      RetractState(hasCur, curGrp, curV, wait)
     }
-    state.update(s)
-    // a key whose pending changes ripen in a batch that brings it no new
-    // data would starve without a timeout (same fix as the CEP drain)
-    if (streaming && s.pending.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(s.pending.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** Streaming retraction aggregation — emits per-change deltas the
-    * moment the watermark seals them. In streaming mode `events` must
-    * carry an event-time watermark on `ts` (same contract as
-    * `Cep.detect`); output is append-mode deltas — fold downstream.
+    * moment they seal (`Sealed`; a redelivery collapses by `tie`). In
+    * streaming mode `events` must carry an event-time watermark on `ts`
+    * (same contract as `Cep.detect`); output is append-mode deltas — fold
+    * downstream.
     */
   def retractStream(events: Dataset[ChangeEvent],
       streaming: Boolean = true): Dataset[AggDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[RetractState, AggDelta](OutputMode.Append, timeoutConf) {
-        (_, it, state) => process(it, state, streaming)
-      }
+    Sealed.run(events.groupByKey(_.k), streaming, Retract)
   }
 
   /** One sealed per-key ROW delta: the key's current row became
@@ -178,30 +158,18 @@ object Retractions {
 
   final case class RowState(pending: Seq[Chg])
 
-  private def processRows(k: Long, it: Iterator[ChangeEvent],
-      state: GroupState[RowState], streaming: Boolean): Iterator[RowDelta] = {
-    var s = state.getOption.getOrElse(RowState(Vector.empty))
-    if (!(streaming && state.hasTimedOut)) {
-      // same redelivery contract as `process` (dedup by tie in-window;
-      // older-than-watermark redeliveries never reach this operator)
-      val have = s.pending.iterator.map(_.tie).toSet
-      val fresh = it.map(e => Chg(e.tsUs, e.tsMs, e.tie, e.op == "D", e.grp, e.v))
-        .filterNot(c => have(c.tie)).toSeq.distinctBy(_.tie)
-      s = RowState(s.pending ++ fresh)
+  private object Rows extends Changes[RowState, RowDelta] {
+    def empty = RowState(Vector.empty)
+    def pending(s: RowState) = s.pending
+    def fold(k: Long, s: RowState, ripe: Seq[Chg], wait: Seq[Chg], wmMs: Long,
+        out: mutable.Buffer[RowDelta]) = {
+      ripe.foreach(c => out += RowDelta(k, c.tsUs, c.tie, c.del, c.grp, c.v))
+      RowState(wait)
     }
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = ripe.sortBy(c => (c.tsUs, c.tie))
-      .map(c => RowDelta(k, c.tsUs, c.tie, c.del, c.grp, c.v))
-    // a fully-drained key REMOVES its state row (r7, ADVICE): unlike
-    // retractStream nothing semantic is retained here — an empty RowState
-    // kept forever grows state by one row per distinct key ever seen,
-    // contradicting the "state is the unripe buffer ONLY" contract
-    if (wait.isEmpty) state.remove() else state.update(RowState(wait))
-    if (streaming && wait.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(wait.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
+    // nothing semantic is retained here (the store downstream is the
+    // current row): an empty RowState kept forever would grow state by one
+    // row per distinct key ever seen
+    override def disposable(s: RowState) = true
   }
 
   /** The SEALED changelog: every change, once final under the watermark,
@@ -213,12 +181,7 @@ object Retractions {
       streaming: Boolean = true): Dataset[RowDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[RowState, RowDelta](OutputMode.Append, timeoutConf) {
-        (k, it, state) => processRows(k, it, state, streaming)
-      }
+    Sealed.run(events.groupByKey(_.k), streaming, Rows)
   }
 
   // ------------------- incremental JOIN maintenance -------------------
@@ -228,10 +191,7 @@ object Retractions {
     * rest the usual changelog envelope.
     */
   final case class SideEvent(side: Boolean, j: String, k: Long, ts: Timestamp,
-      tie: Long, op: String, v: Long) {
-    def tsMs: Long = ts.getTime
-    def tsUs: Long = ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
-  }
+      tie: Long, op: String, v: Long)
 
   /** One join-pair delta: the pair (a_k, b_k) with values (va, vb)
     * entered (`d` = +1) or left (`d` = −1) the join result. Fold per
@@ -242,6 +202,9 @@ object Retractions {
   final case class JoinDelta(j: String, a_k: Long, b_k: Long, d: Long,
       va: Long, vb: Long)
 
+  /** One buffered side change; like `Chg`, its `tsMs` is no longer read
+    * and stays so that the state format does not change.
+    */
   final case class SideChg(side: Boolean, k: Long, tsUs: Long, tsMs: Long,
       tie: Long, del: Boolean, v: Long)
 
@@ -254,52 +217,40 @@ object Retractions {
   final case class JoinState(aCur: Map[Long, Long], bCur: Map[Long, Long],
       pending: Seq[SideChg])
 
-  private def emptyJoinState = JoinState(Map.empty, Map.empty, Vector.empty)
-
-  private def processJoin(j: String, it: Iterator[SideEvent],
-      state: GroupState[JoinState], streaming: Boolean): Iterator[JoinDelta] = {
-    var s = state.getOption.getOrElse(emptyJoinState)
-    if (!(streaming && state.hasTimedOut)) {
-      // redelivery dedup by (side, tie) inside the window, as everywhere
-      val have = s.pending.iterator.map(c => (c.side, c.tie)).toSet
-      val fresh = it
-        .map(e => SideChg(e.side, e.k, e.tsUs, e.tsMs, e.tie, e.op == "D", e.v))
-        .filterNot(c => have((c.side, c.tie))).toSeq
-        .distinctBy(c => (c.side, c.tie))
-      s = s.copy(pending = s.pending ++ fresh)
-    }
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs < wm)
-    val out = scala.collection.mutable.Buffer[JoinDelta]()
-    var aCur = s.aCur
-    var bCur = s.bCur
-    // one total (ts, tie) order per join key ACROSS sides: an A-change and
-    // a B-change interleave exactly as their event times dictate
-    ripe.sortBy(c => (c.tsUs, c.tie)).foreach { c =>
-      if (c.side) {
-        aCur.get(c.k).foreach(old =>
-          bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, -1L, old, vb) })
-        if (c.del) aCur -= c.k
-        else {
-          bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, 1L, c.v, vb) }
-          aCur += (c.k -> c.v)
-        }
-      } else {
-        bCur.get(c.k).foreach(old =>
-          aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, -1L, va, old) })
-        if (c.del) bCur -= c.k
-        else {
-          aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, 1L, va, c.v) }
-          bCur += (c.k -> c.v)
+  private object JoinFold extends Sealed.Op[String, SideEvent, SideChg, JoinState, JoinDelta] {
+    def empty = JoinState(Map.empty, Map.empty, Vector.empty)
+    def buffered(e: SideEvent) =
+      SideChg(e.side, e.k, Sealed.micros(e.ts), e.ts.getTime, e.tie, e.op == "D", e.v)
+    def pending(s: JoinState) = s.pending
+    def id(c: SideChg) = (c.side, c.tie)
+    // one total order per join key ACROSS sides: an A-change and a B-change
+    // interleave exactly as their event times dictate
+    def order(c: SideChg) = (c.tsUs, 0, c.tie)
+    def fold(j: String, s: JoinState, ripe: Seq[SideChg], wait: Seq[SideChg],
+        wmMs: Long, out: mutable.Buffer[JoinDelta]) = {
+      var aCur = s.aCur
+      var bCur = s.bCur
+      ripe.foreach { c =>
+        if (c.side) {
+          aCur.get(c.k).foreach(old =>
+            bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, -1L, old, vb) })
+          if (c.del) aCur -= c.k
+          else {
+            bCur.foreach { case (bk, vb) => out += JoinDelta(j, c.k, bk, 1L, c.v, vb) }
+            aCur += (c.k -> c.v)
+          }
+        } else {
+          bCur.get(c.k).foreach(old =>
+            aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, -1L, va, old) })
+          if (c.del) bCur -= c.k
+          else {
+            aCur.foreach { case (ak, va) => out += JoinDelta(j, ak, c.k, 1L, va, c.v) }
+            bCur += (c.k -> c.v)
+          }
         }
       }
+      JoinState(aCur, bCur, wait)
     }
-    s = JoinState(aCur, bCur, wait)
-    state.update(s)
-    if (streaming && wait.nonEmpty)
-      state.setTimeoutTimestamp(
-        math.max(wait.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** Incremental inner-join maintenance over TWO changelogs — the
@@ -332,12 +283,7 @@ object Retractions {
       .select(lit(isA).as("side"), col("grp").as("j"), col("k"), col("ts"),
         col("tie"), col("op"), col("v"))
     val tagged = tag(a, isA = true).unionByName(tag(b, isA = false)).as[SideEvent]
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    tagged.groupByKey(_.j)
-      .flatMapGroupsWithState[JoinState, JoinDelta](OutputMode.Append, timeoutConf) {
-        (j, it, state) => processJoin(j, it, state, streaming)
-      }
+    Sealed.run(tagged.groupByKey(_.j), streaming, JoinFold)
   }
 
   /** Rewrite a MOVING-KEY changelog into `joinDeltaStream`'s

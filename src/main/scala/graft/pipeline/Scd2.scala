@@ -2,10 +2,11 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** SCD2 (slowly-changing-dimension, type 2) materialization of a keyed
   * change stream: every upsert opens a new version of its key and closes
@@ -23,8 +24,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Streaming: `flatMapGroupsWithState` holding ONE open version per key
   * plus the unripe (above-watermark) arrivals — a closed version is
-  * emitted only when the event that closes it is sealed by the watermark,
-  * so out-of-order arrival inside the delay cannot retract an emitted row
+  * emitted only when the event that closes it seals (`Sealed`), so
+  * out-of-order arrival inside the delay cannot retract an emitted row
   * and the closed-version set equals the batch operator's
   * `valid_to IS NOT NULL` rows on the same sealed input (EventTimeSpec
   * pins this). The open version is retained in state (it IS the key's
@@ -67,64 +68,42 @@ object Scd2 {
   final case class Scd2Version(k: String, valid_from: Timestamp, from_tie: Long,
       payload: String, valid_to: Timestamp, to_tie: Long)
 
-  final case class Rec(tsMs: Long, tie: Long, payload: String)
+  /** A buffered change, its time in microseconds. Checkpoints written when
+    * this record held milliseconds (`tsMs`) do not resume; only tests drive
+    * this operator.
+    */
+  final case class Rec(tsUs: Long, tie: Long, payload: String)
 
   /** Per-key state: the open (current) version + not-yet-sealed arrivals.
     * Open is O(1) forever; pending is bounded by watermark delay × per-key
     * change rate — the same bound as the as-of join's unripe buffer.
     */
-  final case class Scd2State(open: Option[Rec], pending: Vector[Rec],
-      frontierMs: Long)
+  final case class Scd2State(open: Option[Rec], pending: Seq[Rec])
 
-  private val empty = Scd2State(None, Vector.empty, Long.MinValue)
-
-  private def process(k: String, it: Iterator[Scd2Event],
-      state: GroupState[Scd2State], streaming: Boolean): Iterator[Scd2Version] = {
-    var s = state.getOption.getOrElse(empty)
-    // late beyond the watermark contract → dropped (append-window rule).
-    // r7 note (ADVICE item investigated, boundary left as-is): the advice
-    // held that Spark's late filter drops only STRICTLY-below-watermark
-    // rows, so an event at exactly ts == wm could arrive after an
-    // inclusive (<= wm) seal and be lost by the exclusive (> frontier)
-    // admit. Probed empirically on Spark 4.1 (flatMapGroupsWithState,
-    // file source, single-file triggers): once the late-events watermark
-    // catches up, a row at ts == wm is ALREADY dropped by Spark's own
-    // late filter (only wm + 1 ms survives), and during the one-batch
-    // late/eviction watermark lag the sibling lands in the SAME batch as
-    // the seal, where the pending sort orders it correctly. The feared
-    // arrival is therefore unreachable, and the inclusive seal is
-    // equivalent to Retractions' strict one (events at ts == wm just seal
-    // one batch earlier); changing proven oracle-checked semantics on a
-    // false premise would be churn, not a fix.
-    it.foreach { e =>
-      if (!streaming || e.ts.getTime > s.frontierMs)
-        s = s.copy(pending = s.pending :+ Rec(e.ts.getTime, e.tie, e.payload))
-    }
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    val (ripe, wait) = s.pending.partition(_.tsMs <= wm)
-    // distinct: collapse at-least-once redeliveries inside the window
-    val rs = ripe.distinct.sortBy(r => (r.tsMs, r.tie))
-    val out = scala.collection.mutable.Buffer[Scd2Version]()
-    var open = s.open
-    rs.foreach { r =>
-      open.foreach { o =>
-        out += Scd2Version(k, new Timestamp(o.tsMs), o.tie, o.payload,
-          new Timestamp(r.tsMs), r.tie)
+  private object Versions extends Sealed.Op[String, Scd2Event, Rec, Scd2State, Scd2Version] {
+    def empty = Scd2State(None, Vector.empty)
+    def buffered(e: Scd2Event) = Rec(Sealed.micros(e.ts), e.tie, e.payload)
+    def pending(s: Scd2State) = s.pending
+    def id(r: Rec) = r
+    def order(r: Rec) = (r.tsUs, 0, r.tie)
+    def fold(k: String, s: Scd2State, ripe: Seq[Rec], wait: Seq[Rec], wmMs: Long,
+        out: mutable.Buffer[Scd2Version]) = {
+      var open = s.open
+      ripe.foreach { r =>
+        open.foreach { o =>
+          out += Scd2Version(k, Sealed.timestamp(o.tsUs), o.tie, o.payload,
+            Sealed.timestamp(r.tsUs), r.tie)
+        }
+        open = Some(r)
       }
-      open = Some(r)
+      Scd2State(open, wait)
     }
-    s = Scd2State(open, wait, math.max(s.frontierMs, wm))
-    state.update(s)
-    // a key whose pending events ripen in a batch that brings it no new
-    // data would starve without a timeout (same fix as the CEP drain)
-    if (streaming && wait.nonEmpty)
-      state.setTimeoutTimestamp(math.max(wait.iterator.map(_.tsMs).min, wm + 1))
-    out.iterator
   }
 
   /** Streaming SCD2 — emits each version the moment the watermark seals
-    * the change that CLOSES it. `events` must carry a watermark on `ts`
-    * in streaming mode; batch mode (`streaming=false`) seals everything
+    * the change that CLOSES it (the `Sealed` policy; a redelivered change
+    * collapses on the whole record). `events` must carry a watermark on
+    * `ts` in streaming mode; batch mode (`streaming=false`) seals everything
     * (the final open version per key is never emitted in either mode —
     * it is the state, read it via `currentView` on the materialized log).
     */
@@ -132,14 +111,7 @@ object Scd2 {
       streaming: Boolean = true): Dataset[Scd2Version] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.k)
-      .flatMapGroupsWithState[Scd2State, Scd2Version](OutputMode.Append, timeoutConf) {
-        (k, it, state) =>
-          if (state.hasTimedOut) process(k, Iterator.empty, state, streaming)
-          else process(k, it, state, streaming)
-      }
+    Sealed.run(events.groupByKey(_.k), streaming, Versions)
   }
 
   /** Build the `Scd2Event` envelope from a DataFrame changelog. */

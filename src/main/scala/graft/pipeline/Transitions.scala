@@ -2,9 +2,10 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of the batch event-transition miner (q63): per-user
   * event-type bigrams with exact integer dwell gaps, emitted incrementally
@@ -16,16 +17,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * totally ordered by (ts, event_id); a transition (from → to) is the pair
   * of adjacent events in that order, with gap_us the exact microsecond
   * difference. Unlike the CEP machine there is no dense index to act as a
-  * frontier, so ripeness is purely watermark-driven: an event is SAFE to
-  * order once the watermark strictly exceeds its event time — Spark drops
-  * arrivals older than the watermark, so nothing can ever sort below it.
+  * frontier, so ripeness is purely watermark-driven: events seal, order and
+  * collapse redeliveries (by `event_id`) under the `Sealed` policy.
   *
   * Design for scale:
   *   - State per key is the unripe buffer + ONE carry event (the last ripe
   *     event, waiting for its successor). Text/props never enter state —
   *     only (event_id, event_type, ts) — so state is tens of bytes per
-  *     buffered event and the buffer drains every trigger as the watermark
-  *     advances. Bounded by the watermark delay × per-user event rate.
+  *     buffered event, bounded by the watermark delay × per-user event rate.
   *   - One shuffle on user_id, co-partitioned with sessionization/CEP.
   *   - Emits raw transition records (append mode); the tiny
   *     (from_type × to_type) count/sum aggregate composes downstream in the
@@ -41,10 +40,7 @@ object Transitions {
     */
   final case class EvLite(user_id: Long, event_id: Long, event_type: String,
       ts: Timestamp) {
-    def tsMs: Long = ts.getTime
-    // getTime already includes the integral-millisecond part of nanos; only
-    // the sub-millisecond remainder must be added back for exact micros
-    def tsUs: Long = ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000
+    def tsUs: Long = Sealed.micros(ts)
   }
 
   final case class EventTransition(user_id: Long, from_type: String,
@@ -52,58 +48,23 @@ object Transitions {
 
   final case class TransState(carry: Option[EvLite], pending: Seq[EvLite])
 
-  private def emptyState = TransState(None, Vector.empty)
-
-  /** Drain every buffered event whose event time is strictly below the
-    * watermark: the watermark guarantee makes their (ts, event_id) position
-    * final, so they can be ordered and paired. Ties at the boundary
-    * (ts == wm) stay buffered — a same-timestamp sibling with a smaller
-    * event_id could still arrive and must sort before them.
-    */
-  private def drainRipe(s0: TransState, wmMs: Long,
-      out: scala.collection.mutable.Buffer[EventTransition]): TransState = {
-    val (ripe, unripe) = s0.pending.partition(_.tsMs < wmMs)
-    if (ripe.isEmpty) return s0
-    val ordered = ripe.sortBy(e => (e.tsUs, e.event_id))
-    var carry = s0.carry
-    ordered.foreach { e =>
-      carry.foreach { c =>
-        out += EventTransition(e.user_id, c.event_type, e.event_type,
-          e.tsUs - c.tsUs)
+  private object Mine extends Sealed.Op[Long, EvLite, EvLite, TransState, EventTransition] {
+    def empty = TransState(None, Vector.empty)
+    def buffered(e: EvLite) = e
+    def pending(s: TransState) = s.pending
+    def id(e: EvLite) = e.event_id
+    def order(e: EvLite) = (e.tsUs, 0, e.event_id)
+    def fold(k: Long, s: TransState, ripe: Seq[EvLite], wait: Seq[EvLite],
+        wmMs: Long, out: mutable.Buffer[EventTransition]) = {
+      var carry = s.carry
+      ripe.foreach { e =>
+        carry.foreach { c =>
+          out += EventTransition(e.user_id, c.event_type, e.event_type, e.tsUs - c.tsUs)
+        }
+        carry = Some(e)
       }
-      carry = Some(e)
+      TransState(carry, wait)
     }
-    TransState(carry, unripe)
-  }
-
-  private def armTimeout(state: GroupState[TransState], s: TransState): Unit =
-    if (s.pending.nonEmpty) {
-      val wm = state.getCurrentWatermarkMs()
-      // fires once the watermark passes the oldest buffered event — exactly
-      // when it ripens — even if the key never receives another arrival
-      state.setTimeoutTimestamp(math.max(s.pending.iterator.map(_.tsMs).min, wm + 1))
-    }
-
-  private def process(it: Iterator[EvLite], state: GroupState[TransState],
-      streaming: Boolean): Iterator[EventTransition] = {
-    val out = scala.collection.mutable.Buffer[EventTransition]()
-    var s = state.getOption.getOrElse(emptyState)
-    if (!(streaming && state.hasTimedOut)) {
-      // at-least-once delivery: a redelivered event still inside the
-      // watermark window arrives again before the original drains — dedup
-      // the buffer by event_id so it can't pair twice. (A redelivery of an
-      // ALREADY-drained event is older than the watermark by definition and
-      // Spark's watermark filter drops it before this operator.)
-      val have = s.pending.iterator.map(_.event_id).toSet
-      val fresh = it.filterNot(e => have(e.event_id)).toSeq.distinctBy(_.event_id)
-      s = s.copy(pending = s.pending ++ fresh)
-    }
-    // batch input is complete: everything is ripe by definition
-    val wm = if (streaming) state.getCurrentWatermarkMs() else Long.MaxValue
-    s = drainRipe(s, wm, out)
-    state.update(s)
-    if (streaming) armTimeout(state, s)
-    out.iterator
   }
 
   /** Mine per-user event-type transitions. `events` needs columns
@@ -119,12 +80,6 @@ object Transitions {
     // event-time watermark metadata, breaking EventTimeTimeout
     val lite = events.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("event_type"), col("ts")).as[EvLite]
-    val timeoutConf =
-      if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    lite
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, EventTransition](OutputMode.Append, timeoutConf) {
-        (_, it, state) => process(it, state, streaming)
-      }
+    Sealed.run(lite.groupByKey(_.user_id), streaming, Mine)
   }
 }

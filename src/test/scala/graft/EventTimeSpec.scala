@@ -275,14 +275,21 @@ class EventTimeSpec extends SparkSpec {
     import spark.implicits._
     val t0 = 1700000000000L
     def ts(sec: Long) = new Timestamp(t0 + sec * 1000)
+    def tsMicro(sec: Long, us: Int) = { val t = ts(sec); t.setNanos(us * 1000); t }
     // left (purchases-like) and right (clicks-like) with an equal-ts pair,
-    // an equal-ts right tie, and a key with no right rows at all
+    // an equal-ts right tie, and a key with no right rows at all. u4 lives
+    // inside one millisecond: its two right rows are 300 µs apart and the
+    // later one has the SMALLER tie, so only microsecond order matches the
+    // left at +800 µs to tie 206 (and the one at +350 µs to tie 207)
     val left = Seq(("u1", ts(10), 100L), ("u1", ts(40), 101L), ("u2", ts(15), 102L),
-      ("u3", ts(25), 103L)).toDF("k", "ts", "id")
+      ("u3", ts(25), 103L), ("u4", tsMicro(60, 350), 104L), ("u4", tsMicro(60, 800), 105L))
+      .toDF("k", "ts", "id")
     val right = Seq(("u1", ts(10), 200L), ("u1", ts(30), 201L), ("u1", ts(30), 205L),
-      ("u2", ts(50), 202L)).toDF("k", "ts", "id")
+      ("u2", ts(50), 202L), ("u4", tsMicro(60, 200), 207L), ("u4", tsMicro(60, 500), 206L))
+      .toDF("k", "ts", "id")
     val want = Joins.asOfJoin(left, right, "k", "ts", "id")
-      .select(col("k"), col("id"), col("asof.id").as("mid"))
+      .select(col("k"), col("id"), col("asof.id").as("mid"), col("ts"),
+        col("asof.ts").as("matched_ts"))
 
     // deliver the envelope out-of-order across files (second file carries
     // events OLDER than the first file's max — inside the watermark delay)
@@ -309,12 +316,18 @@ class EventTimeSpec extends SparkSpec {
       .withWatermark("ts", "5 seconds").as[graft.pipeline.Joins.AsOfEvent]
     val got = runToMemory(Joins.asOfJoinStream(stream).toDF(), "asof_s", "append")
       .where(col("k") =!= "zz")
-      .select(col("k"), col("tie").as("id"), col("matched_tie").as("mid"))
+      .select(col("k"), col("tie").as("id"), col("matched_tie").as("mid"), col("ts"),
+        col("matched_ts"))
     assertSameRows(got, want, "streaming as-of == batch as-of")
     // and the exact expected matches, independently of the batch operator
     val m = got.collect().map(r => r.getLong(1) ->
       (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
-    assert(m == Map(100L -> 200L, 101L -> 205L, 102L -> -1L, 103L -> -1L))
+    assert(m == Map(100L -> 200L, 101L -> 205L, 102L -> -1L, 103L -> -1L,
+      104L -> 207L, 105L -> 206L))
+    // microseconds survive the operator: u4's output times are not truncated
+    val late = got.where(col("id") === 105L).collect().head
+    assert(late.getTimestamp(3) == tsMicro(60, 800) && late.getTimestamp(4) == tsMicro(60, 500),
+      s"u4 times: $late")
 
     // at-least-once redelivery: replaying batch 1's events inside the
     // watermark window must not double-emit matches
@@ -336,7 +349,8 @@ class EventTimeSpec extends SparkSpec {
       .withWatermark("ts", "5 seconds").as[graft.pipeline.Joins.AsOfEvent]
     val got2 = runToMemory(Joins.asOfJoinStream(stream2).toDF(), "asof_dup", "append")
       .where(col("k") =!= "zz")
-      .select(col("k"), col("tie").as("id"), col("matched_tie").as("mid"))
+      .select(col("k"), col("tie").as("id"), col("matched_tie").as("mid"), col("ts"),
+        col("matched_ts"))
     assertSameRows(got2, want, "redelivered stream still == batch")
   }
 
@@ -404,7 +418,10 @@ class EventTimeSpec extends SparkSpec {
     val collected = batchTurns.collect().map(r =>
       Turn(r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
         Option(r.getString(4)), r.getTimestamp(5))).toSeq
-    val (a, b) = collected.splitAt(collected.size / 2)
+    // split on event time, so no watermark a no-data batch moves between
+    // b1 and b2 can drop b2's rows as late
+    val (a, b) = collected.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+      .splitAt(collected.size / 2)
     writeTurnFile(dir, "b1", a)
     writeTurnFile(dir, "b2", b)
     val q = drainToMemory(
@@ -474,7 +491,10 @@ class EventTimeSpec extends SparkSpec {
     val collected = batchTurns.collect().map(r =>
       Turn(r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
         Option(r.getString(4)), r.getTimestamp(5))).toSeq
-    val (a, b) = collected.splitAt(collected.size / 2)
+    // split on event time, so no watermark a no-data batch moves between
+    // b1 and b2 can drop b2's rows as late
+    val (a, b) = collected.sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
+      .splitAt(collected.size / 2)
     // an outer join can only emit a null for a call once the watermark
     // passes call_ts + horizon — calls near the end of a FINITE stream
     // would stay in state forever. The operational pattern is heartbeat
@@ -513,11 +533,17 @@ class EventTimeSpec extends SparkSpec {
     import spark.implicits._
     import graft.pipeline.Scd2
     def ts(sec: Long) = new Timestamp(1700000000000L + sec * 1000)
-    // u1 has an equal-ts tie (zero-duration version), u3 a single open row
+    def tsMicro(sec: Long, us: Int) = { val t = ts(sec); t.setNanos(us * 1000); t }
+    // u1 has an equal-ts tie (zero-duration version), u3 a single open row.
+    // u4's first two changes are 300 µs apart inside one millisecond and
+    // the later one has the SMALLER tie: only microsecond order closes
+    // p before q, and every u4 time carries microseconds
     val changes = Seq(
       ("u1", ts(10), 1L, "a"), ("u1", ts(20), 2L, "b"), ("u1", ts(20), 3L, "b2"),
       ("u1", ts(40), 4L, "c"), ("u2", ts(15), 5L, "x"), ("u2", ts(35), 6L, "y"),
-      ("u3", ts(25), 7L, "only")).toDF("k", "ts", "tie", "v")
+      ("u3", ts(25), 7L, "only"), ("u4", tsMicro(50, 100), 9L, "p"),
+      ("u4", tsMicro(50, 400), 8L, "q"), ("u4", tsMicro(55, 7), 10L, "r"))
+      .toDF("k", "ts", "tie", "v")
     val want = Scd2.materialize(changes, "k", "ts", "tie")
       .where(col("valid_to").isNotNull)
       .select(col("k"), col("ts").as("valid_from"), col("tie").as("from_tie"),
@@ -547,6 +573,10 @@ class EventTimeSpec extends SparkSpec {
       .where(col("k") =!= "zz")
       .select(col("k"), col("valid_from"), col("from_tie"), col("valid_to"))
     assertSameRows(got, want, "streaming SCD2 closed set == batch history")
+    val u4 = got.where(col("k") === "u4").orderBy(col("valid_from")).collect()
+      .map(r => (r.getTimestamp(1), r.getLong(2), r.getTimestamp(3))).toSeq
+    assert(u4 == Seq((tsMicro(50, 100), 9L, tsMicro(50, 400)),
+      (tsMicro(50, 400), 8L, tsMicro(55, 7))), s"u4 versions: $u4")
     // batch mode of the same operator seals everything — identical closed set
     val batchGot = Scd2.scd2Stream(
         Scd2.scd2Events(changes, "k", "ts", "tie"), streaming = false).toDF()
@@ -555,7 +585,7 @@ class EventTimeSpec extends SparkSpec {
     // the current view is the LWW row per key
     val cur = Scd2.currentView(changes, "k", "ts", "tie")
       .select(col("k"), col("tie")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(cur == Map("u1" -> 4L, "u2" -> 6L, "u3" -> 7L))
+    assert(cur == Map("u1" -> 4L, "u2" -> 6L, "u3" -> 7L, "u4" -> 10L))
   }
 
   test("rowDeltaStream: fully-drained keys remove their state rows") {

@@ -117,6 +117,20 @@ class MetricsSpec extends SparkSpec {
     } finally LatencyMonitor.clear("bounded")
   }
 
+  test("listener keeps the newest batches; its totals count every batch") {
+    import org.apache.spark.sql.graftbridge.ProgressEvents
+    val listener = new graft.metrics.GraftQueryListener
+    val n = graft.metrics.LatencyMonitor.Retained
+    val k = 37
+    (1 to n + k).foreach(b => listener.onQueryProgress(ProgressEvents.progress("bounded", b, b)))
+    assert(listener.events.size() == n)
+    assert(listener.events.toArray.toSeq
+      .map(_.asInstanceOf[listener.BatchMetrics].batchId) == (k + 1 to n + k).map(_.toLong))
+    assert(listener.totalRows == (1 to n + k).map(_.toLong).sum)
+    assert(listener.summary().startsWith(s"batches=${n + k} rows=${listener.totalRows} "),
+      listener.summary())
+  }
+
   test("debug taps are pass-through observers with exact accumulator counts") {
     import spark.implicits._
     val df = (0 until 500).map(i => (i.toLong, s"event-$i", "x" * 300))
