@@ -56,7 +56,7 @@ object ClusterCheck {
     * one file per trigger for a stream read with maxFilesPerTrigger = 1.
     */
   private def streamFile(df: org.apache.spark.sql.DataFrame, base: String, name: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val tmp = s"$base/.tmp-$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = fs.globStatus(new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath

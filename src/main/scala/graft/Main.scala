@@ -14,6 +14,7 @@ import graft.source.TranscriptGen.GenConfig
   *   run <tableDir> <workDir> [maxFilesPerTrigger] — snapshot+incremental CDC replay
   *   materialize <workDir> [asOfBatch]              — current-state table + counts (time travel)
   *   lineage <workDir>                              — per-partition commit lineage
+  *   monitor <workDir>                              — per-batch rows and source latency
   */
 object Main {
   def main(args: Array[String]): Unit = args.toList match {
@@ -137,17 +138,27 @@ object Main {
           case other => System.err.println(s"unknown format $other"); sys.exit(2)
         }
         println(s"[export] $fmt ($compression) -> $dest")
-      case "monitor" :: workDir :: rest =>
-        // debug observer over the committed log (≙ reference monitoring/
-        // logging mappers, sampled — see metrics.Taps)
-        val everyN = rest.headOption.map(_.toLong).getOrElse(1000L)
+      case "monitor" :: workDir :: Nil =>
+        // one row per committed batch, read back from its manifest (≙
+        // reference CDCMonitor): rows per route, max source latency, late
+        // events. A compaction epoch's row has rows only.
         val sink = new graft.sink.ExactlyOnceSink(spark, s"$workDir/out")
-        val ev = sink.readCommitted("events").get
-        val acc = spark.sparkContext.longAccumulator("monitor-events")
-        val tapped = metrics.Taps.tap(ev.select(col("op"), col("src_table"),
-          col("ts_ms"), col("after")), "monitor", everyN = everyN, counter = Some(acc))
-        tapped.write.format("noop").mode("overwrite").save()
-        println(s"[monitor] events=${acc.value} sampledEvery=$everyN")
+        sink.readManifest() match {
+          case Some(m) =>
+            val lat = Seq("maxLatencyMs", "lateEvents").foldLeft(m)((df, c) =>
+              if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast("long")))
+            val route = substring_index(col("partition"), "/", 1)
+            val rows = Seq(pipeline.Router.RouteData, pipeline.Router.RouteError,
+              pipeline.Router.RouteSchema).map(r => sum(when(route === r, col("rowCount"))
+                .otherwise(0L)).as(s"${r}_rows"))
+            lat.groupBy(col("batchId"))
+              .agg(rows.head, rows.tail :+ max("maxLatencyMs").as("maxLatencyMs") :+
+                sum("lateEvents").as("lateEvents"): _*)
+              .orderBy(col("batchId")).collect()
+              .foreach(r => println("[monitor] " + r.schema.fieldNames.zip(r.toSeq)
+                .map { case (k, v) => s"$k=$v" }.mkString(" ")))
+          case None => println("[monitor] no committed batches")
+        }
       case "savepoint" :: workDir :: destDir :: Nil =>
         // relocatable savepoint: checkpoint + sink state + stream copy with
         // the seen-file log rebased onto the copy (pipeline.Savepoint;
@@ -289,7 +300,7 @@ object Main {
       case other =>
         System.err.println(s"unknown args: ${other.mkString(" ")}\n" +
           "usage: gen <tableDir> [numConvs] [avgTurns] [zipf] | run <tableDir> <workDir> [mft] | " +
-          "materialize <workDir> | lineage <workDir> | diff <workDir> <from> <to> | " +
+          "materialize <workDir> | lineage <workDir> | monitor <workDir> | diff <workDir> <from> <to> | " +
           "ingest <docsDir> <workDir> [minQuality] [knownDir] | " +
           "view <changesDir> <workDir> [watermark] [nBuckets] | " +
           "table <changesDir> <workDir> [watermark] [nBuckets] | " +

@@ -32,7 +32,6 @@ object ScalingBench {
     */
   def runLevel(mode: String, level: Int, numConvs: Int, avgTurns: Int,
       zipf: Double): (Double, Long) = {
-    sys.props.getOrElseUpdate("graft.replayMode", "true") // declared replay
     val spark = mode match {
       case "executors" => GraftSession.cluster(level, 2, 4096, s"graft-scaling-x$level")
       case _ => GraftSession.local(level, s"graft-scaling-$level")
@@ -57,8 +56,8 @@ object ScalingBench {
       avgTurns: Int, workRoot: String, zipf: Double): (Double, Long) = {
     val (tableDir, _) = Bench.ensureTable(spark, numConvs, avgTurns, workRoot, zipf)
     val outDir = s"$workRoot/replayed-$numConvs-$avgTurns-z$zipf"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$outDir/_replayed")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
       val streamDir = s"$workRoot/stream-prep-$numConvs-$avgTurns-z$zipf"
       val ckDir = s"$workRoot/ck-prep-$numConvs-$avgTurns-z$zipf"

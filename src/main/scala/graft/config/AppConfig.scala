@@ -109,12 +109,8 @@ final case class AppConfig(
     else if (!graft.sink.Export.Compressions.contains(exportCompression))
       Left(s"unsupported compression '$exportCompression' " +
         s"(one of ${graft.sink.Export.Compressions.mkString("/")})")
-    else if (sys.props.get("graft.replayMode").exists(v =>
-        scala.util.Try(graft.metrics.LatencyMonitor.parseReplayMode(v)).isFailure))
-      // the pager-safety flag is a sysprop, not a config key, but a typo in
-      // it must still fail HERE at startup — inside the data plane it can
-      // only degrade monitoring, never crash the query
-      Left(s"graft.replayMode must be true or false, got '${sys.props("graft.replayMode")}'")
+    else if (latencyAlertMs < 1)
+      Left(s"latencyAlertMs must be >= 1 (got $latencyAlertMs)")
     else if (rollingIntervalMs > 0 && rollingIntervalMs < 1000)
       // 0 = time-based rolling disabled; a sub-second interval would drive
       // a sub-second continuous trigger (WAL/manifest churn, near-zero

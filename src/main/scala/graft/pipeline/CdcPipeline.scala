@@ -25,43 +25,49 @@ object CdcPipeline {
   /** Route + write one micro-batch, exactly once: routing, enrichment and
     * time-bucketing are columns; the route is a partition column (Spark's
     * stand-in for the reference's side outputs). Count first, then write:
-    * ONE aggregate computes the commit lineage and the source-latency stats
-    * (reference CDCMonitor's 10 s warn), then its exact counts lay out the
-    * sink's single shuffle. Both passes read the routed rows computed once
-    * (`ExactlyOnceSink.computedOnce`). A replayed batchId is a no-op.
-    * `alertMs` is the source-latency alert threshold; 0 records no stats.
+    * ONE aggregate computes the commit lineage and the source latency,
+    * then its exact counts lay out the sink's single shuffle. Both passes
+    * read the routed rows computed once (`ExactlyOnceSink.computedOnce`).
+    * A replayed batchId is a no-op.
+    *
+    * The manifest is the batch's metrics record: each partition's line
+    * carries `maxLatencyMs`, `latencySumMs` and `latencyN` of the latency
+    * `processing_timestamp − source.ts_ms`, and `lateEvents`, the events
+    * whose latency exceeds `alertMs` (≙ reference CDCMonitor's 10 s warn).
+    * The streaming plan stamps `processing_timestamp` from the offset log,
+    * so a batch replayed after a crash republishes the same record.
     */
   def processBatch(sink: ExactlyOnceSink, batch: DataFrame, batchId: Long,
       tables: Seq[String] = Nil,
       alertMs: Long = graft.metrics.LatencyMonitor.DefaultAlertMs): Unit = {
-    if (sink.isCommitted(batchId)) return
+    process(sink, batch, batchId, tables, alertMs); ()
+  }
+
+  /** `processBatch`, returning the batch's late-event count (0 for a
+    * replayed batch).
+    */
+  private def process(sink: ExactlyOnceSink, batch: DataFrame, batchId: Long,
+      tables: Seq[String], alertMs: Long): Long = {
+    if (sink.isCommitted(batchId)) return 0L
     ExactlyOnceSink.computedOnce(tableFiltered(routed(batch), tables)) { keyed =>
-      val nowMs = System.currentTimeMillis()
       var t0 = System.nanoTime()
-      val lat = lit(nowMs) - col("source.ts_ms")
+      val lat = unix_millis(col("processing_timestamp")) - col("source.ts_ms")
       val rows = ExactlyOnceSink.lineageRows(keyed, col("source.lsn"),
         coalesce(max(lat), lit(0L)), coalesce(sum(lat), lit(0L)),
-        count(when(lat > alertMs, 1)), count(col("source.ts_ms")))
+        count(col("source.ts_ms")), count(when(lat > alertMs, 1)))
       graft.metrics.StageTimers.addLineage(sink.outDir, System.nanoTime() - t0)
       val lineage = ExactlyOnceSink.lineage(rows)
       t0 = System.nanoTime()
       sink.writeBatch(batchId, keyed, lineage.map(l => l._1 -> l._2).toMap)
       graft.metrics.StageTimers.addWrite(sink.outDir, System.nanoTime() - t0)
-      if (alertMs > 0 && rows.nonEmpty) {
-        val latN = rows.map(_.getLong(7)).sum
-        graft.metrics.LatencyMonitor.record(
-          batchId,
-          maxLatencyMs = rows.map(_.getLong(4)).max,
-          avgLatencyMs = if (latN == 0) 0.0 else rows.map(_.getLong(5)).sum.toDouble / latN,
-          lateEvents = rows.map(_.getLong(6)).sum,
-          events = rows.map(_.getLong(1)).sum,
-          alertMs = alertMs,
-          pipeline = sink.outDir)
-      }
+      val latency = rows.map(r => r.getString(0) ->
+        Seq("maxLatencyMs", "latencySumMs", "latencyN", "lateEvents").zip((4 to 7).map(r.getLong))
+      ).toMap
       t0 = System.nanoTime()
-      sink.commit(batchId, lineage)
+      sink.commit(batchId, lineage, latency)
       graft.metrics.StageTimers.addCommit(sink.outDir, System.nanoTime() - t0)
       graft.metrics.StageTimers.batchDone(sink.outDir)
+      rows.map(_.getLong(7)).sum
     }
   }
 
@@ -95,6 +101,11 @@ object CdcPipeline {
   /** Start the streaming query over an already-spooled stream directory.
     * `format` selects the ingest edge: "parquet" (typed envelope files) or
     * "json" (raw Debezium JSON lines → from_json at the edge).
+    *
+    * Latency alert: one WARN when a batch has events older than `alertMs`
+    * after a batch that had none (or as the first batch), one INFO when the
+    * batches are on time again. The state is this query's own, so a
+    * backfill logs one line; every batch's numbers are on its manifest.
     */
   def start(spark: SparkSession, streamDir: String, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 16,
@@ -109,6 +120,7 @@ object CdcPipeline {
       case "json" => ChangeStreamReader.jsonStream(spark, streamDir, maxFilesPerTrigger)
       case other => throw new IllegalArgumentException(s"unknown ingest format $other")
     }
+    var wasLate = false
     // stamped in the streaming plan, where the engine binds it to the
     // batch timestamp in the offset log: a batch replayed after a crash
     // commits the same processing_timestamp as its first attempt
@@ -118,7 +130,14 @@ object CdcPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        processBatch(sink, df, id, tables, alertMs)
+        val late = process(sink, df, id, tables, alertMs) > 0
+        if (late != wasLate) {
+          wasLate = late
+          val log = org.apache.log4j.Logger.getLogger(getClass)
+          if (late) log.warn(s"[latency] batch=$id has events older than ${alertMs}ms; " +
+            "no further warn until a batch is on time (each batch's latency: Main monitor)")
+          else log.info(s"[latency] batch=$id on time again")
+        }
         // periodic log compaction at the trigger boundary — the one point
         // with no concurrent sink readers in the pipeline itself — keeps
         // manifest/file counts bounded on a continuous deployment

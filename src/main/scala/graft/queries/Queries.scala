@@ -679,16 +679,18 @@ object Queries {
       kind: String)(build: String => Unit): String = {
     val safe = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val dir = s"/tmp/graft-index-$kind-$safe"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_done")
+    val fs = marker.getFileSystem(conf)
     // r7 (ADVICE): the marker carries a CONTENT fingerprint of the source
     // tables (file names, lengths, mtimes), not just the path — fixture
     // parquet regenerated at the same path invalidates the cached index
     // instead of silently answering q55/q57/q65/q70 from stale postings
     val fp = {
       val src = new org.apache.hadoop.fs.Path(sfDir)
-      if (!fs.exists(src)) "none"
-      else fs.listStatus(src).sortBy(_.getPath.getName)
+      val srcFs = src.getFileSystem(conf)
+      if (!srcFs.exists(src)) "none"
+      else srcFs.listStatus(src).sortBy(_.getPath.getName)
         .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
         .mkString("|")
     }

@@ -201,17 +201,23 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
   }
 
   /** Atomically publish the batch's lineage (the manifest rename makes
-    * the commit visible).
+    * the commit visible). `fields` adds numeric keys to a partition's line,
+    * after the lineage keys: the CDC pipeline publishes each partition's
+    * source latency there, so the exactly-once commit is the batch's
+    * metrics record (`Main monitor` reads it back). A replayed batch
+    * computes the same fields, so its manifest is byte-identical.
     */
-  def commit(batchId: Long, lineage: Seq[(String, Long, Long, Long)]): Unit = {
+  def commit(batchId: Long, lineage: Seq[(String, Long, Long, Long)],
+      fields: Map[String, Seq[(String, Long)]] = Map.empty): Unit = {
     observeWritten(batchDir(batchId), lineage.map(_._2).sum)
-    log.publish(batchId, manifestBody(batchId, lineage, ""))
+    log.publish(batchId, manifestBody(batchId, lineage,
+      part => fields.getOrElse(part, Nil).map { case (k, v) => s""","$k":$v""" }.mkString))
   }
 
   private def manifestBody(batchId: Long, lineage: Seq[(String, Long, Long, Long)],
-      extra: String): String =
+      extra: String => String): String =
     lineage.map { case (part, rows, minLsn, maxLsn) =>
-      s"""{"batchId":$batchId,"partition":"$part","rowCount":$rows,"minLsn":$minLsn,"maxLsn":$maxLsn$extra}"""
+      s"""{"batchId":$batchId,"partition":"$part","rowCount":$rows,"minLsn":$minLsn,"maxLsn":$maxLsn${extra(part)}}"""
     }.mkString("\n")
 
   private val sectionRoute =
@@ -261,11 +267,17 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
   def readTable(table: String): Option[DataFrame] =
     readCommitted("events", Some(table))
 
-  /** Distinct tables present in the committed data route. */
-  def tables(): Seq[String] =
-    readCommitted("events").map(
-      _.select("src_table").distinct().collect().map(_.getString(0)).sorted.toSeq)
-      .getOrElse(Seq.empty)
+  /** Distinct tables present in the committed data route, from the
+    * `data/<table>/<date>` partition keys of the live and epoch manifests
+    * (no data file is read).
+    */
+  def tables(): Seq[String] = {
+    val s = log.state()
+    val table = s""""partition":"${sectionRoute("events")}/([^"]*)/[^"/]*"""".r
+    (s.live.map(log.entry) ++ s.floor.map(log.epoch))
+      .flatMap(m => table.findAllMatchIn(log.read(m)).map(_.group(1)))
+      .distinct.sorted
+  }
 
   /** The lineage manifest as a DataFrame (metrics / audits): the live
     * per-batch manifests plus the current compaction epoch's aggregated
@@ -295,6 +307,8 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     *
     * Time travel: `asOfBatch` below the epoch floor is refused (that
     * history is physically merged); at or above it works unchanged.
+    * The epoch manifest carries the lineage only: a compacted batch's
+    * metrics fields (its source latency) go with its retired manifest.
     * Returns the new epoch floor.
     *
     * Concurrency: the flip itself is atomic, and cleanup is DEFERRED one
@@ -336,7 +350,7 @@ final class ExactlyOnceSink(spark: SparkSession, val outDir: String,
     fs.delete(dst, true) // orphan from a crashed earlier attempt at the same c
     if (!fs.rename(new Path(staging), dst))
       throw new java.io.IOException(s"compaction rename failed for epoch $c")
-    log.publishEpoch(c, manifestBody(c, lineage, ""","compacted":true"""))
+    log.publishEpoch(c, manifestBody(c, lineage, _ => ""","compacted":true"""))
     // ---- visibility flipped; cleanup is DEFERRED one epoch ----
     // Artifacts retired by THIS flip (the eligible batch dirs and the
     // previous compacted dir) stay on disk until the NEXT compaction, so a

@@ -237,9 +237,11 @@ class CdcPipelineSpec extends SparkSpec {
     val stateBefore = CdcPipeline.materialize(spark, outDir).toDF().collect()
       .map(_.toString).sorted.toSeq
 
+    val tablesBefore = sink.tables()
     val epoch = sink.compact()
     assert(epoch == beforeBatches.max)
     assert(sink.committedBatchIds.isEmpty, "all per-batch manifests retired")
+    assert(sink.tables() == tablesBefore && tablesBefore.nonEmpty, "tables from the epoch manifest")
     assert(snap() == contentBefore, "compaction must preserve committed content")
     assert(CdcPipeline.materialize(spark, outDir).toDF().collect()
       .map(_.toString).sorted.toSeq == stateBefore)

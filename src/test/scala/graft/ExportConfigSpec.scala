@@ -72,6 +72,7 @@ class ExportConfigSpec extends SparkSpec {
     assert(d.parallelism == 4) // CLI beats env default
     assert(AppConfig.load(Seq("env=nope")).isLeft)
     assert(AppConfig.load(Seq("parallelism=0")).isLeft)
+    assert(AppConfig.load(Seq("latencyAlertMs=0")).isLeft)
     assert(AppConfig.substitute("pre-${HOME}-post", s => Some("/root").filter(_ => s == "HOME"))
       == "pre-/root-post")
   }
