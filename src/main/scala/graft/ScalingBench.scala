@@ -1,81 +1,40 @@
 package graft
 
-/** Scaling-efficiency evidence for the north rule: the same job on the same
-  * input at two parallelism levels (local[N] as the sandbox stand-in for N
-  * executors; BASELINE.md §"Our target").
+/** N → 4N executor scaling evidence for BASELINE's criterion ("N and 4N
+  * executors ≥ 0.8"): the same job on the same input under
+  * `local-cluster[n,2,4096]`, n = 1, 4, 16 SEPARATE 2-core executor JVMs
+  * (own heap, own GC, shuffle over loopback), the faithful emulation of an
+  * N-executor deployment on one box. perfbench's `scaling.efficiency_1_to_n`
+  * measures 1 → N threads inside one JVM; only this run compares executor
+  * counts, which is why it is kept.
   *
-  * Protocol (hardened per VERDICT.md r1 #6 — a best-of-4 with 0.20–0.36
-  * siblings is not evidence):
-  *   - k repetitions PER LEVEL, fully interleaved (2,8,32, 2,8,32, …) so
+  * Protocol:
+  *   - k repetitions per level, fully interleaved (1,4,16, 1,4,16, …) so
   *     slow machine drift hits every level equally;
   *   - medians reported with min–max spread;
-  *   - the measured job is the COMPUTE-BOUND engine pass (CDC replay
-  *     through the exactly-once sink PLUS CEP state machines, session +
-  *     tumbling windows, the tool-call join, LWW materialization);
-  *   - a raw-ALU control (seeded LCG burn on the same thread counts) is
-  *     measured in the same process to separate scheduler/memory-bus
-  *     effects from engine effects;
-  *   - fresh JVM per engine run (a SparkContext's thread pool is fixed at
-  *     startup; restarting in-process undercounts).
+  *   - the measured job is the CDC replay through the exactly-once sink
+  *     plus the analytics pass (CEP, session + tumbling windows, the
+  *     tool-call join, LWW materialization), `Bench.cdcThroughput`;
+  *   - ALU and streamed-memory controls on the same core counts, same
+  *     process, separate scheduler/memory-bus limits from engine ones;
+  *   - a fresh driver JVM per engine run.
   *
-  * Usage: sbt "runMain graft.ScalingBench [numConvs] [avgTurns] [reps]"
-  * Child mode (internal): graft.ScalingBench --child <cpus> <convs> <turns>
+  * Usage: sbt "runMain graft.ScalingBench [numConvs] [avgTurns] [reps] [zipf]"
+  * (SPARK_HOME must point at the Spark distribution: the workers launch
+  * executor JVMs from it). Writes BENCH/BASELINE.md and prints one JSON line.
+  * Child mode (internal): graft.ScalingBench --child <executors> <convs> <turns> <zipf>
   */
 object ScalingBench {
 
-  /** One measured run. mode "executors": `level` separate 2-core executor
-    * JVMs (local-cluster — the faithful N-executor emulation); mode
-    * "threads": local[level] (all cores share one JVM + one GC); mode
-    * "compute": local[level] timing ONLY the analytics pass over a
-    * pre-replayed committed log (no stream/sink I/O in the window) — the
-    * most compute-bound slice of the engine (VERDICT r2 #9).
-    */
-  def runLevel(mode: String, level: Int, numConvs: Int, avgTurns: Int,
-      zipf: Double): (Double, Long) = {
-    val spark = mode match {
-      case "executors" => GraftSession.cluster(level, 2, 4096, s"graft-scaling-x$level")
-      case _ => GraftSession.local(level, s"graft-scaling-$level")
-    }
-    try mode match {
-      case "compute" =>
-        computeThroughput(spark, numConvs, avgTurns, "/tmp/graft-scaling", zipf)
-      case _ =>
-        Bench.cdcThroughput(spark, numConvs, avgTurns, "/tmp/graft-scaling",
-          analytics = true, zipf = zipf)
-    } finally spark.stop()
-  }
+  private val Levels = Seq(1, 4, 16)
+  private val CoresPerExecutor = 2
 
-  /** Analytics-only throughput: replay the change stream ONCE into a shared
-    * committed log (content-addressed — the first child, always the 2-core
-    * level under the interleaved protocol, creates it, so every level reads
-    * byte-identical files), then time the full engine pass (CEP,
-    * sessionization, tumbling windows, tool-call join, LWW materialization)
-    * over it.
-    */
-  def computeThroughput(spark: org.apache.spark.sql.SparkSession, numConvs: Int,
-      avgTurns: Int, workRoot: String, zipf: Double): (Double, Long) = {
-    val (tableDir, _) = Bench.ensureTable(spark, numConvs, avgTurns, workRoot, zipf)
-    val outDir = s"$workRoot/replayed-$numConvs-$avgTurns-z$zipf"
-    val marker = new org.apache.hadoop.fs.Path(s"$outDir/_replayed")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      val streamDir = s"$workRoot/stream-prep-$numConvs-$avgTurns-z$zipf"
-      val ckDir = s"$workRoot/ck-prep-$numConvs-$avgTurns-z$zipf"
-      graft.source.ChangeStreamReader.deliverChanges(spark, tableDir, streamDir)
-      graft.source.ChangeStreamReader.spoolSnapshot(spark, tableDir, streamDir, numFiles = 64)
-      graft.pipeline.CdcPipeline
-        .start(spark, streamDir, outDir, ckDir, maxFilesPerTrigger = 48)
-        .awaitTermination()
-      fs.delete(new org.apache.hadoop.fs.Path(streamDir), true)
-      fs.delete(new org.apache.hadoop.fs.Path(ckDir), true)
-      fs.createNewFile(marker)
-    }
-    val sink = new graft.sink.ExactlyOnceSink(spark, outDir)
-    val n = sink.readCommitted("events").get.count()
-    val t0 = System.nanoTime()
-    Bench.runAnalyticsPass(spark, outDir)
-    val sec = (System.nanoTime() - t0) / 1e9
-    (n / sec, n)
+  /** One measured run on `executors` 2-core executor JVMs. */
+  def runLevel(executors: Int, numConvs: Int, avgTurns: Int, zipf: Double): (Double, Long) = {
+    val spark = GraftSession.cluster(executors, CoresPerExecutor, 4096, s"graft-scaling-x$executors")
+    try Bench.cdcThroughput(spark, numConvs, avgTurns, "/tmp/graft-scaling",
+      analytics = true, zipf = zipf)
+    finally spark.stop()
   }
 
   /** Raw-ALU control: `threads` threads × `iters` LCG iterations each.
@@ -99,7 +58,7 @@ object ScalingBench {
   }
 
   /** Memory-bandwidth control: `threads` threads each stream-sum a private
-    * 256 MB long array `passes` times. Returns bytes/second delivered. This
+    * 64 MB long array `passes` times. Returns bytes/second delivered. This
     * is what Spark's scan/shuffle work actually stresses — on one box all
     * threads share a single memory system, so its scaling curve is the
     * honest upper bound for the engine's.
@@ -129,214 +88,140 @@ object ScalingBench {
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
-    if (s.isEmpty) 0.0
-    else if (s.length % 2 == 1) s(s.length / 2)
+    if (s.length % 2 == 1) s(s.length / 2)
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  /** Run one level in a fresh driver JVM; returns (events/s, events). */
+  private def spawn(executors: Int, numConvs: Int, avgTurns: Int, zipf: Double): (Double, Long) = {
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val opens = Seq(
+      "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
+      "java.base/java.io", "java.base/java.net", "java.base/java.nio",
+      "java.base/java.util", "java.base/java.util.concurrent",
+      "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
+      "java.base/sun.nio.cs", "java.base/sun.security.action",
+      "java.base/sun.util.calendar"
+    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    val cmd = Seq(java) ++ opens ++ Seq("-Xmx24g", "-cp", System.getProperty("java.class.path"),
+      "graft.ScalingBench", "--child", executors.toString, numConvs.toString,
+      avgTurns.toString, zipf.toString)
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    pb.environment().put("SPARK_HOME", sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
+    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
+    val proc = pb.start()
+    // keep a tail of child output: a child that dies (OOM, missing
+    // SPARK_HOME, startup failure) must fail THIS run with its actual
+    // error, not an opaque parse failure after hours of reps
+    var result: Option[String] = None
+    val tail = new scala.collection.mutable.ArrayDeque[String]()
+    scala.io.Source.fromInputStream(proc.getInputStream).getLines().foreach { l =>
+      if (l.startsWith("SCALING_RESULT")) result = Some(l)
+      else { tail.append(l); if (tail.size > 40) { tail.removeHead(); () } }
+    }
+    val code = proc.waitFor()
+    result.map(_.split(" ")) match {
+      case Some(Array(_, _, tps, events)) => (tps.toDouble, events.toLong)
+      case _ => throw new IllegalStateException(
+        s"scaling child (executors=$executors) exited code=$code without SCALING_RESULT; " +
+          s"last output:\n${tail.mkString("\n")}")
+    }
   }
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--child")) {
-      val Array(_, m, c, n, t, z) = args
-      val (tps, events) = runLevel(m, c.toInt, n.toInt, t.toInt, z.toDouble)
-      println(f"SCALING_RESULT $c $tps%.1f $events")
+      val Array(_, x, c, t, z) = args
+      val (tps, events) = runLevel(x.toInt, c.toInt, t.toInt, z.toDouble)
+      println(f"SCALING_RESULT $x $tps%.1f $events")
       return
     }
-    val numConvs = args.headOption.filterNot(_ == "--report").map(_.toInt).getOrElse(20000)
-    val avgTurns = args.lift(1).filterNot(_ => args.head == "--report").map(_.toInt).getOrElse(20)
-    val reps0 = args.lift(2).filterNot(_ => args.head == "--report").map(_.toInt).getOrElse(5)
+    val numConvs = args.lift(0).map(_.toInt).getOrElse(20000)
+    val avgTurns = args.lift(1).map(_.toInt).getOrElse(20)
+    val reps = args.lift(2).map(_.toInt).getOrElse(5)
     // default 0.5: realistic sub-linear skew. At zipf > 1 the HOTTEST key is
     // a constant fraction of the whole corpus (~14% at z=1.1) — keyed CEP /
     // sessionization on one conversation is inherently serial, so the DATA
-    // imposes an Amdahl ceiling (eff ≤ 0.57 at 2→8) that no engine escapes;
-    // a 10^12-turn corpus cannot have a 1.4×10^11-turn conversation. The
-    // z=1.1 run is still reported as the skew-ceiling sidebar.
-    val zipf = args.lift(3).filterNot(_ => args.head == "--report").map(_.toDouble).getOrElse(0.5)
-    // "executors" (default): level = number of 2-core executor JVMs
-    // (1 → 4 → 16 = N → 4N → 16N executors); "threads": level = local[k].
-    val mode =
-      if (args.headOption.contains("--report")) args.lift(3).getOrElse("executors")
-      else args.lift(4).getOrElse("executors")
-    // --report mode: 5th arg = numConvs for the report header
-    val numConvsR =
-      if (args.headOption.contains("--report")) args.lift(4).map(_.toInt).getOrElse(numConvs)
-      else numConvs
+    // imposes an Amdahl ceiling (BENCH/SKEW.md) that no engine escapes.
+    val zipf = args.lift(3).map(_.toDouble).getOrElse(0.5)
 
-    // --report <logFile> <nEvents>: rebuild the report from an existing run's
-    // "[scaling] rep=i level=c tps=N" lines (e.g. after a formatting crash)
-    // — the ALU control is re-measured live, engine numbers are not.
-    val reparse: Option[Map[Int, Seq[Double]]] = args.headOption.collect {
-      case "--report" =>
-        val rx = """rep=(\d+) level=(\d+) tps=(\d+)""".r.unanchored
-        scala.io.Source.fromFile(args(1)).getLines().collect {
-          case rx(_, c, t) => (c.toInt, t.toDouble)
-        }.toSeq.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    }
-    reparse.foreach(p => require(p.nonEmpty,
-      "--report: no 'rep=i level=c tps=N' lines found in the log — wrong file or wrong mode?"))
-    val reps = reparse.map(_.values.head.size).getOrElse(reps0)
-
-    def spawn(cpus: Int): (Double, Long) = {
-      val java = s"${System.getProperty("java.home")}/bin/java"
-      val cp = System.getProperty("java.class.path")
-      val opens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-        "java.base/java.io", "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic", "java.base/sun.nio.ch",
-        "java.base/sun.nio.cs", "java.base/sun.security.action",
-        "java.base/sun.util.calendar"
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-      val cmd = Seq(java) ++ opens ++ Seq("-Xmx24g", "-cp", cp,
-        "graft.ScalingBench", "--child", mode, cpus.toString, numConvs.toString,
-        avgTurns.toString, zipf.toString)
-      val out = new StringBuilder
-      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      // local-cluster workers launch executor JVMs from the distribution
-      pb.environment().put("SPARK_HOME", sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
-      pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-      val proc = pb.start()
-      // keep a tail of child output: a child that dies (OOM, missing
-      // SPARK_HOME, startup failure) must fail THIS run with its actual
-      // error, not an opaque index-out-of-bounds after hours of reps
-      val tail = new scala.collection.mutable.ArrayDeque[String]()
-      scala.io.Source.fromInputStream(proc.getInputStream).getLines().foreach { l =>
-        if (l.startsWith("SCALING_RESULT")) out.append(l)
-        else { tail.append(l); if (tail.size > 40) { tail.removeHead(); () } }
-      }
-      val code = proc.waitFor()
-      val parts = out.toString.split(" ")
-      if (out.isEmpty || parts.length < 4)
-        throw new IllegalStateException(
-          s"scaling child (level=$cpus) exited code=$code without SCALING_RESULT; last output:\n" +
-            tail.mkString("\n"))
-      (parts(2).toDouble, parts(3).toLong)
-    }
-
-    val levels = if (mode == "executors") Seq(1, 4, 16) else Seq(2, 8, 32)
-    def lbl(c: Int): String =
-      if (mode == "executors") s"$c×(2-core executor JVM)" else s"local[$c]"
-    val runs = levels.map(_ -> scala.collection.mutable.ArrayBuffer[Double]()).toMap
+    val runs = Levels.map(_ -> scala.collection.mutable.ArrayBuffer[Double]()).toMap
     var nEvents = 0L
-    reparse match {
-      case Some(parsed) =>
-        parsed.foreach { case (c, xs) => runs(c) ++= xs }
-        nEvents = args.lift(2).map(_.toLong).getOrElse(0L)
-      case None =>
-        for (r <- 1 to reps; c <- levels) {
-          val (tps, n) = spawn(c)
-          nEvents = n
-          runs(c) += tps
-          println(f"[scaling] rep=$r level=$c tps=$tps%.0f")
-        }
+    for (r <- 1 to reps; x <- Levels) {
+      val (tps, n) = spawn(x, numConvs, avgTurns, zipf)
+      nEvents = n
+      runs(x) += tps
+      println(f"[scaling] rep=$r executors=$x tps=$tps%.0f")
     }
-    val Seq(l0, l1, l2c) = levels
-    val med = levels.map(c => c -> median(runs(c).toSeq)).toMap
-    val eff28 = (med(l1) / med(l0)) / 4.0
-    val eff832 = (med(l2c) / med(l1)) / 4.0
+    val Seq(l0, l1, l2) = Levels
+    val med = Levels.map(x => x -> median(runs(x).toSeq)).toMap
+    val eff = (med(l1) / med(l0)) / 4.0
+    val eff16 = (med(l2) / med(l1)) / 4.0
 
-    // controls on the same TOTAL CORE counts, same process: raw ALU (what
-    // the scheduler can deliver) and streamed memory (what scan/shuffle
-    // stress)
-    val coreLevels = if (mode == "executors") levels.map(_ * 2) else levels
+    val cores = Levels.map(_ * CoresPerExecutor)
     println("[scaling] running ALU control…")
-    val ctrl = coreLevels.map(c => c -> lcgBurn(c)).toMap
-    val ctrlEff28 = (ctrl(coreLevels(1)) / ctrl(coreLevels(0))) / 4.0
-    val ctrlEff832 = (ctrl(coreLevels(2)) / ctrl(coreLevels(1))) / 4.0
+    val alu = cores.map(c => c -> lcgBurn(c)).toMap
     println("[scaling] running memory-bandwidth control…")
-    val mem = coreLevels.map(c => c -> memBurn(c)).toMap
-    val memEff28 = (mem(coreLevels(1)) / mem(coreLevels(0))) / 4.0
-    val memEff832 = (mem(coreLevels(2)) / mem(coreLevels(1))) / 4.0
+    val mem = cores.map(c => c -> memBurn(c)).toMap
+    def ctrlEff(m: Map[Int, Double], i: Int): Double = (m(cores(i)) / m(cores(i - 1))) / 4.0
 
-    def spread(c: Int): String = {
-      val s = runs(c).toSeq.sorted
+    def lbl(x: Int): String = s"$x×(2-core executor JVM)"
+    def spread(x: Int): String = {
+      val s = runs(x).toSeq.sorted
       f"${s.head}%,.0f–${s.last}%,.0f"
     }
-
+    def ctrlRows(m: Map[Int, Double]): String = cores.zipWithIndex.map { case (c, i) =>
+      f"| $c | ${m(c)}%.3e | ${if (i == 0) "—" else f"${ctrlEff(m, i)}%.3f"} |"
+    }.mkString("\n")
     val verdictLine =
-      if (eff28 >= 0.8)
-        f"**N → 4N criterion (${lbl(l0)} → ${lbl(l1)}): median efficiency ${eff28}%.3f ≥ 0.8 — met.**"
+      if (eff >= 0.8)
+        f"**N → 4N criterion (${lbl(l0)} → ${lbl(l1)}): median efficiency $eff%.3f ≥ 0.8 — met.**"
       else
-        f"**N → 4N criterion (${lbl(l0)} → ${lbl(l1)}): median efficiency ${eff28}%.3f — " +
+        f"**N → 4N criterion (${lbl(l0)} → ${lbl(l1)}): median efficiency $eff%.3f — " +
           f"below 0.8 on this one-box sandbox. Same-session controls at the same core " +
-          f"counts: ALU ${ctrlEff28}%.3f, streamed memory ${memEff28}%.3f — the gap is " +
-          f"Spark's shared-substrate cost on a single box (allocation/GC pressure, " +
-          f"shuffle serialization, driver barriers), which a real 4N-executor cluster " +
-          f"multiplies away with per-node heaps, buses and NICs; see the reading below, " +
-          f"BENCH/EXECUTORS.md (separate-executor-JVM emulation: same ~2× at 4N, " +
-          f"loopback-shuffle collapse at 16N) and BENCH/SKEW.md.**"
+          f"counts: ALU ${ctrlEff(alu, 1)}%.3f, streamed memory ${ctrlEff(mem, 1)}%.3f; " +
+          f"see BENCH/EXECUTORS.md and BENCH/SKEW.md.**"
 
-    val jobDesc =
-      if (mode == "compute")
-        """Analytics-only engine pass — CEP state machines, session/tumbling
-          |windows, tool-call stream join, LWW materialization over a
-          |PRE-REPLAYED committed log; no stream ingestion or sink commit I/O
-          |inside the timed window (the most compute-bound slice of the
-          |engine, VERDICT r2 #9)""".stripMargin.replace("\n", " ")
-      else
-        """Same job — snapshot+incremental CDC replay through the exactly-once sink
-          |PLUS the full engine pass (CEP state machines, session/tumbling windows,
-          |tool-call stream join, LWW materialization)""".stripMargin.replace("\n", " ")
     val report =
-      f"""# BENCH — measured results${if (mode == "compute") " (analytics-only pass)" else ""}
+      f"""# BENCH — measured results
          |
-         |## ${if (mode == "compute") "Analytics-only" else "End-to-end"} throughput scaling (north-rule criterion)
+         |## End-to-end throughput scaling (north-rule criterion)
          |
-         |$jobDesc — on byte-identical input
-         |and batch boundaries (seed=42, zipf=$zipf, $numConvsR%,d conversations,
+         |Same job — snapshot+incremental CDC replay through the exactly-once sink
+         |PLUS the full engine pass (CEP state machines, session/tumbling windows,
+         |tool-call stream join, LWW materialization) — on byte-identical input
+         |and batch boundaries (seed=42, zipf=$zipf, $numConvs%,d conversations,
          |$nEvents%,d change events incl. snapshot reads). Protocol: $reps
-         |repetitions per level, fully interleaved (2,8,32, 2,8,32, …), fresh JVM
-         |per run, medians reported.
+         |repetitions per level, fully interleaved (1,4,16, 1,4,16, …), fresh
+         |driver JVM per run, medians reported.
          |
          || level | median events/s (envelope; ≈1.31×turns) | spread (min–max) | median efficiency vs N/4 |
          ||---|---|---|---|
          || ${lbl(l0)} (N) | ${med(l0)}%,.0f | ${spread(l0)} | — |
-         || ${lbl(l1)} (4N) | ${med(l1)}%,.0f | ${spread(l1)} | **${eff28}%.3f** |
-         || ${lbl(l2c)} (16N) | ${med(l2c)}%,.0f | ${spread(l2c)} | ${eff832}%.3f (vs 4N) |
+         || ${lbl(l1)} (4N) | ${med(l1)}%,.0f | ${spread(l1)} | **$eff%.3f** |
+         || ${lbl(l2)} (16N) | ${med(l2)}%,.0f | ${spread(l2)} | $eff16%.3f (vs 4N) |
          |
          |$verdictLine
          |
-         |### Control experiments on the same thread counts, same process
+         |### Control experiments on the same core counts, same process
          |
-         |1. Raw ALU (pure-register LCG burn, zero memory traffic) — what the
-         |   box's scheduler can deliver:
+         |1. Raw ALU (pure-register LCG burn, zero memory traffic):
          |
          || threads | iters/s | efficiency vs N/4 |
          ||---|---|---|
-         || ${coreLevels(0)}  | ${ctrl(coreLevels(0))}%.3e | — |
-         || ${coreLevels(1)}  | ${ctrl(coreLevels(1))}%.3e | ${ctrlEff28}%.3f |
-         || ${coreLevels(2)} | ${ctrl(coreLevels(2))}%.3e | ${ctrlEff832}%.3f |
+         |${ctrlRows(alu)}
          |
-         |2. Streamed memory (each thread sum-scans a private 64 MB array) —
-         |   what Spark's scan/shuffle/cache work actually stresses:
+         |2. Streamed memory (each thread sum-scans a private 64 MB array):
          |
          || threads | bytes/s | efficiency vs N/4 |
          ||---|---|---|
-         || ${coreLevels(0)}  | ${mem(coreLevels(0))}%.3e | — |
-         || ${coreLevels(1)}  | ${mem(coreLevels(1))}%.3e | ${memEff28}%.3f |
-         || ${coreLevels(2)} | ${mem(coreLevels(2))}%.3e | ${memEff832}%.3f |
-         |
-         |Reading: at the N→4N core counts BOTH controls scale near-linearly, so
-         |the scheduler and raw bandwidth are NOT the limit there; the engine's
-         |shortfall at N→4N is Spark's own shared-one-box substrate — a single
-         |JVM heap and allocator under 4× the mutator threads, in-process
-         |shuffle, driver/barrier serialization. The executor-JVM emulation
-         |(BENCH/EXECUTORS.md) isolates heaps and still lands at ~0.47, because
-         |it swaps GC sharing for a loopback-TCP shuffle tax. At 16N the memory
-         |control itself drops (bandwidth saturation) and binds everything. A
-         |real N→4N executor comparison multiplies per-node heaps, memory buses
-         |and NICs — the resources this box, by construction, cannot multiply.
-         |The per-operator evidence that the plans scale on a real cluster is
-         |the PlanSpec audit (map-side partials, composite shuffle keys,
-         |bounded state, salted writes, AQE skew); the data-side Amdahl
-         |analysis is BENCH/SKEW.md (zipf > 1 caps ANY engine at ≤ 0.57).
+         |${ctrlRows(mem)}
          |
          |Measured ${java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)}.
          |""".stripMargin
     val dir = java.nio.file.Paths.get("BENCH")
     java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(
-      dir.resolve(if (mode == "compute") "COMPUTE.md" else "BASELINE.md"), report)
+    java.nio.file.Files.writeString(dir.resolve("BASELINE.md"), report)
     println(report)
-    println(f"""{"scaling_efficiency":$eff28%.3f,"mode":"$mode","tpsN":${med(l0)}%.0f,"tps4N":${med(l1)}%.0f,"tps16N":${med(l2c)}%.0f,"eff_8_32":$eff832%.3f,"reps":$reps,"zipf":$zipf,"alu_eff_2_8":$ctrlEff28%.3f,"alu_eff_8_32":$ctrlEff832%.3f,"mem_eff_2_8":$memEff28%.3f,"mem_eff_8_32":$memEff832%.3f}""")
+    println(f"""{"scaling_efficiency":$eff%.3f,"mode":"executors","tpsN":${med(l0)}%.0f,"tps4N":${med(l1)}%.0f,"tps16N":${med(l2)}%.0f,"eff_4_16":$eff16%.3f,"reps":$reps,"zipf":$zipf,"alu_eff":${ctrlEff(alu, 1)}%.3f,"alu_eff_16":${ctrlEff(alu, 2)}%.3f,"mem_eff":${ctrlEff(mem, 1)}%.3f,"mem_eff_16":${ctrlEff(mem, 2)}%.3f}""")
   }
 }

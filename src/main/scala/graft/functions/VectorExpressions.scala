@@ -125,6 +125,21 @@ object VectorKernels {
   val KindFloat = 1
   val KindLong = 2
 
+  /** Bound on the centroid state a `nearest_centroid`, `centroid_dists` or
+    * `centroid_argmax` expression carries. The state rides the plan as a
+    * reference object, so it is serialized into the stage's task closure
+    * and every task deserializes its own copy; a model past this size
+    * belongs in a join, not in the expression.
+    */
+  val MaxCentroidBytes: Long = 16L << 20
+
+  def requireCentroidBytes(what: String, bytes: Long): Unit =
+    require(bytes <= MaxCentroidBytes,
+      s"$what: centroid state of $bytes bytes is over MaxCentroidBytes " +
+        s"($MaxCentroidBytes bytes), the bound on state shipped in each task closure")
+
+  def matrixBytes(m: Array[Array[Double]]): Long = m.iterator.map(_.length * 8L).sum
+
   /** Per-stratum dense centroid state for `centroid_argmax` (r7, the q51
     * rewrite): stratum names sorted ASCENDING (so the first strict-greater
     * winner reproduces the (score desc, name asc) row_number tiebreak),
@@ -140,7 +155,11 @@ object VectorKernels {
       val names: Array[String],
       val cvecs: Array[Array[Long]],
       val present: Array[Array[Boolean]],
-      val sqrtCn2: Array[Double]) extends Serializable
+      val sqrtCn2: Array[Double]) extends Serializable {
+    def bytes: Long =
+      cvecs.iterator.map(_.length * 8L).sum + present.iterator.map(_.length.toLong).sum +
+        sqrtCn2.length * 8L + names.iterator.map(_.length * 2L).sum
+  }
 
   /** Nearest-centroid-by-SCORE argmax over integer hashed embeddings — the
     * narrow kernel form of centroidClassify's former
@@ -243,6 +262,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]],
     StructField("cid", IntegerType, nullable = false),
     StructField("dist", DoubleType, nullable = false)))
   override def prettyName: String = "nearest_centroid"
+  VectorKernels.requireCentroidBytes(prettyName, VectorKernels.matrixBytes(centroids))
   override protected def nullSafeEval(input: Any): Any =
     VectorKernels.assign(input.asInstanceOf[ArrayData], isFloat, centroids)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -261,6 +281,7 @@ case class CentroidDists(child: Expression, centroids: Array[Array[Double]],
     isFloat: Boolean) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "centroid_dists"
+  VectorKernels.requireCentroidBytes(prettyName, VectorKernels.matrixBytes(centroids))
   override protected def nullSafeEval(input: Any): Any =
     VectorKernels.distsToAll(input.asInstanceOf[ArrayData], isFloat, centroids)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -284,6 +305,7 @@ case class CentroidArgmax(child: Expression,
     StructField("pred", org.apache.spark.sql.types.StringType, nullable = true),
     StructField("score", DoubleType, nullable = true)))
   override def prettyName: String = "centroid_argmax"
+  VectorKernels.requireCentroidBytes(prettyName, strata.bytes)
   override protected def nullSafeEval(input: Any): Any =
     VectorKernels.centroidArgmax(input.asInstanceOf[ArrayData], strata)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

@@ -48,30 +48,6 @@ final case class ChangeEvent(
     historyRecord: Option[String]
 )
 
-/** Enriched data-route event (reference adds processing_timestamp,
-  * pipeline_version, data_quality_score — CDCEventProcessor.scala:73-117). */
-final case class EnrichedEvent(
-    op: String,
-    ts_ms: Long,
-    before: Option[Turn],
-    after: Option[Turn],
-    source: SourceInfo,
-    pipeline_version: String,
-    data_quality_score: Double
-)
-
-/** Per-batch, per-partition commit lineage record written by the
-  * exactly-once sink (SURVEY.md §7.4). One JSON line per (batch, partition).
-  */
-final case class CommitRecord(
-    batchId: Long,
-    partition: String,
-    files: Seq[String],
-    rowCount: Long,
-    minLsn: Long,
-    maxLsn: Long
-)
-
 /** A detected CEP pattern match (role-sequence / tool-call / session). */
 final case class PatternMatch(
     conv_id: String,
@@ -81,13 +57,4 @@ final case class PatternMatch(
     start_ts: Timestamp,
     end_ts: Timestamp,
     detail: String
-)
-
-/** A closed conversation session (turn-gap sessionization). */
-final case class ConvSession(
-    conv_id: String,
-    session_id: Int,
-    start_ts: Timestamp,
-    end_ts: Timestamp,
-    n_turns: Int
 )

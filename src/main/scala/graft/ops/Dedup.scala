@@ -143,7 +143,7 @@ object Dedup {
     // table. The former union-of-two-projections shape shared the
     // self-join EXCHANGE between its branches but re-ran the final
     // (id1, id2) aggregate and the sizes join once per orientation
-    // (BenchExtra: the duplicated tail cost ~0.9 s of q60's 2.4 s at
+    // (OPTIMIZATION_r07.md: the duplicated tail cost ~0.9 s of q60's 2.4 s at
     // sf0.1); joining both sizes once and exploding the qualifying
     // orientations narrowly computes the aggregate exactly once. Output
     // rows are identical: same exact-integer threshold per orientation,

@@ -283,7 +283,7 @@ object Similarity {
     // norms are computed ONCE PER VECTOR here and carried through the join
     // (r7b): the verify previously re-ran the norm kernel per CANDIDATE
     // PAIR — 2×dims extra flops per pair, ~2/3 of the verify stage's cost
-    // (BenchExtra: join-no-verify 0.49 s vs pairs 1.59 s at sf0.1).
+    // (OPTIMIZATION_r07.md: join-no-verify 0.49 s vs pairs 1.59 s at sf0.1).
     // Identical values by construction: same kernel, same input vector,
     // and the product _na·_nb is the exact expression norm(a)·norm(b) was.
     val assigned = clean.select(col(idCol), col(vecCol))

@@ -324,8 +324,8 @@ object Queries {
     // sides — uncached, the events scan + distinct ran 3× (before-plan).
     // r7b: a lead-window variant (one user_id exchange instead of the
     // composite-key self-join) was built and MEASURED SLOWER — min-of-4
-    // same-window A/B via BenchExtra: self-join 0.75 s vs window 1.14 s at
-    // sf0.1 — the cached grid broadcast-joins here while the window forces
+    // same-window A/B (OPTIMIZATION_r07.md): self-join 0.75 s vs window
+    // 1.14 s at sf0.1 — the cached grid broadcast-joins here while the window forces
     // a full sort behind its exchange; reverted per the empirical loop
     // (guide §1.1, the q31/q60-cache precedent).
     val ud = table(spark, sfDir, "events")

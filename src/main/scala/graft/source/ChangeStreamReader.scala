@@ -135,10 +135,6 @@ object ChangeStreamReader {
     parseRawJson(
       spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger).text(streamDir))
 
-  /** Batch view of a JSONL change-log directory (oracle input). */
-  def jsonBatch(spark: SparkSession, streamDir: String): DataFrame =
-    parseRawJson(spark.read.text(streamDir))
-
   /** Write one JSONL log segment into a watched dir (test/simulation aid:
     * the JSON twin of writeChangeFile).
     */

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.PlanMetricsListener
+
 import graft.pipeline.CdcPipeline
 import graft.sink.ExactlyOnceSink
 import graft.source.{ChangeStreamReader, TranscriptGen}
@@ -9,7 +11,8 @@ import graft.source.TranscriptGen.GenConfig
 
 /** Per-batch metrics from the durable record (≙ reference CDCMonitor,
   * minus the parallelism-unsafe singleton — SURVEY.md §7.5): each committed
-  * batch's manifest lines carry its source latency.
+  * batch's manifest lines carry its source latency. Per-query metrics come
+  * from the executed plan through `PlanMetricsListener`.
   */
 class MetricsSpec extends SparkSpec {
 
@@ -52,5 +55,38 @@ class MetricsSpec extends SparkSpec {
     assert(m.count() == 1, "both events in one data partition")
     assert(m.select(("rowCount" +: latencyFields).map(col): _*).first().toSeq ==
       Seq(2L, 30000L, 31000L, 2L, 1L))
+  }
+
+  test("plan-metrics listener: one line per write, listing the final plan's exchange") {
+    import scala.jdk.CollectionConverters._
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new PlanMetricsListener(lines.add(_))
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(0, 10000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+        .write.format("noop").mode("overwrite").save()
+      // the listener bus delivers in order: once the collect's line is in,
+      // every line of the write is too
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!lines.asScala.exists(_.startsWith("""{"planMetrics":"collect"""")) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val writes = lines.asScala.toSeq.map(parse(_))
+      .filter(l => (l \ "planMetrics") == JString("overwrite"))
+    assert(writes.size == 1, lines.asScala.mkString("\n"))
+    val ops = (writes.head \ "operators").children
+    val names = ops.map(o => (o \ "name").values)
+    assert(!names.contains("AdaptiveSparkPlan"), names)
+    val exchange = ops.find(o => (o \ "name") == JString("Exchange"))
+      .getOrElse(fail(s"no Exchange among $names"))
+    Seq("shuffleRecordsWritten", "shuffleBytesWritten").foreach { m =>
+      exchange \ "metrics" \ m match {
+        case JInt(v) => assert(v > 0, s"$m = $v")
+        case other => fail(s"$m: $other")
+      }
+    }
   }
 }

@@ -1260,4 +1260,30 @@ class OpsSpec extends SparkSpec {
     val stats = Multimodal.modalityStats(media)
     assert(stats.agg(sum("n_media")).first().getLong(0) == docs.count())
   }
+
+  test("centroid expressions reject state over MaxCentroidBytes, before any job") {
+    import graft.functions.{VectorFunctions, VectorKernels}
+    // rows share one array: the matrix counts (rows × 512 KiB) bytes
+    // without allocating them
+    val width = 1 << 16
+    val rows = (VectorKernels.MaxCentroidBytes / (width * 8L)).toInt + 1
+    val row = new Array[Double](width)
+    val big = Array.fill(rows)(row)
+    val longRow = new Array[Long](width)
+    val strata = new VectorKernels.StrataCentroids(Array.fill(rows)("s"),
+      Array.fill(rows)(longRow), Array.fill(rows)(Array.emptyBooleanArray),
+      Array.fill(rows)(1.0))
+    val v = col("v")
+    Seq[() => Any](
+      () => VectorFunctions.nearestCentroid(v, big, isFloat = true),
+      () => VectorFunctions.centroidDists(v, big, isFloat = true),
+      () => VectorFunctions.centroidArgmax(v, strata)
+    ).foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(s"MaxCentroidBytes (${VectorKernels.MaxCentroidBytes} bytes)"),
+        e.getMessage)
+    }
+    // one row fewer is exactly the bound, which is allowed
+    VectorFunctions.nearestCentroid(v, big.init, isFloat = true)
+  }
 }

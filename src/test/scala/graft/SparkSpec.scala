@@ -6,16 +6,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite, temp dirs, row-exact
-  * DataFrame comparison (sorted canonical string form — the per-row
-  * invariant is exact equality, so no tolerance).
+/** Shared test harness: one local session per suite, temp dirs deleted
+  * after the suite, row-exact DataFrame comparison (sorted canonical
+  * string form — the per-row invariant is exact equality, so no tolerance).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = GraftSession.local(4, getClass.getSimpleName)
 
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(s"graft-$prefix").toString
+  private val madeDirs = scala.collection.mutable.ArrayBuffer[java.io.File]()
+
+  /** A fresh directory under java.io.tmpdir, deleted with its contents
+    * after the suite.
+    */
+  def tmpDir(prefix: String): String = {
+    val d = Files.createTempDirectory(s"graft-$prefix").toFile
+    madeDirs.synchronized(madeDirs += d)
+    d.toString
+  }
 
   def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -35,6 +43,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     // session is shared across suites in one JVM (getOrCreate) — do not stop.
-    super.afterAll()
+    try madeDirs.synchronized(madeDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    finally super.afterAll()
   }
 }
