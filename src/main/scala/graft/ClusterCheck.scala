@@ -2,11 +2,11 @@ package graft
 
 /** Multi-executor-JVM equality check: run a kernel- and shuffle-heavy
   * subset of the battery under `local-cluster[2,2,...]` — SEPARATE
-  * executor JVMs, real serialization boundaries, extension resolution in
+  * executor JVMs, real serialization boundaries, kernel classes loaded in
   * executors — and compare row-for-row against the local-mode outputs a
   * prior `graft.Verify` run wrote. local[32] hides whole failure classes
-  * (closure capture, kernel registration via SparkSessionExtensions in
-  * fresh executor JVMs, codegen class shipping); this is the cheap hard
+  * (closure capture, kernel classes and their reference objects resolving
+  * in fresh executor JVMs, codegen class shipping); this is the cheap hard
   * signal that the plans run beyond one JVM.
   *
   * Usage:

@@ -50,7 +50,6 @@ object GraftSession {
       // 11.9 -> 6.9 s per pass; untraced, batch_p90_ms median 1,626 ->
       // 1,205 ms over 20 interleaved pairs (18 won).
       .config("spark.sql.streaming.join.stateFormatVersion", "3")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -69,8 +68,10 @@ object GraftSession {
 
   private def ready(spark: SparkSession): SparkSession = {
     spark.sparkContext.setLogLevel("WARN")
-    // getOrCreate may return a pre-existing session built without the
-    // extensions config — the imperative path is idempotent either way
+    // registers the kernels' SQL names; idempotent, since getOrCreate may
+    // return a session that already has them. No session extension is
+    // needed: functions resolve on the driver, and streaming queries'
+    // cloned sessions copy the registry.
     graft.functions.GraftFunctions.ensureRegistered(spark)
     spark
   }

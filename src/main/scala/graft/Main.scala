@@ -12,9 +12,22 @@ import graft.source.TranscriptGen.GenConfig
   * Subcommands:
   *   gen <tableDir> [numConvs] [avgTurns] [zipf]   — synthesize the transcript table
   *   run <tableDir> <workDir> [maxFilesPerTrigger] — snapshot+incremental CDC replay
+  *   pipeline key=value…                           — config-driven run (config.AppConfig)
   *   materialize <workDir> [asOfBatch]              — current-state table + counts (time travel)
-  *   lineage <workDir>                              — per-partition commit lineage
+  *   cep <workDir>                                  — CEP pattern matches over the committed turns
+  *   sessions <workDir> [gap]                       — session windows over the committed turns
+  *   tooljoin <workDir>                             — assistant⋈tool call/response pairs
+  *   export <workDir> jsonl|avro|dlq|schema <dest> [compression]
   *   monitor <workDir>                              — per-batch rows and source latency
+  *   lineage <workDir>                              — per-partition commit lineage
+  *   diff <workDir> <fromBatch> <toBatch>           — change set between two frontiers
+  *   compact <workDir> [upToBatch]                  — sink log-compaction epoch
+  *   savepoint <workDir> <destDir>                  — relocatable resumable copy
+  *   ingest <docsDir> <workDir> [minQuality] [knownDir] — streaming corpus curation
+  *   view|table <changesDir> <workDir> [watermark] [nBuckets] — materialized view / table folds
+  *   pack <docsDir> <workDir> [seqLen]              — continuous sequence packing
+  *   index build|append|compact|stat <indexDir> [args] — gram-index lifecycle
+  *   ivf build|append|stat <indexDir> [args]        — IVF-index lifecycle
   */
 object Main {
   def main(args: Array[String]): Unit = args.toList match {
@@ -74,6 +87,14 @@ object Main {
       s"master=${spark.sparkContext.master} events=$n tables=${outSink.tables().mkString(",")}")
   }
 
+  /** The committed `events` section of `workDir`'s sink; fails like
+    * `materialize` when nothing is committed yet.
+    */
+  private[graft] def committedEvents(spark: org.apache.spark.sql.SparkSession,
+      workDir: String): org.apache.spark.sql.DataFrame =
+    new graft.sink.ExactlyOnceSink(spark, s"$workDir/out").readCommitted("events")
+      .getOrElse(throw new IllegalStateException(s"no committed batches in $workDir/out"))
+
   private def dispatch(args: List[String],
       spark: org.apache.spark.sql.SparkSession): Unit = {
     args match {
@@ -112,20 +133,17 @@ object Main {
         println(s"[materialize] rows=${df.count()} convs=${df.select("conv_id").distinct().count()}" +
           asOf.fold("")(b => s" asOfBatch=$b"))
       case "cep" :: workDir :: Nil =>
-        val sink = new graft.sink.ExactlyOnceSink(spark, s"$workDir/out")
-        val turns = pipeline.Windows.turnsFromEvents(sink.readCommitted("events").get)
+        val turns = pipeline.Windows.turnsFromEvents(committedEvents(spark, workDir))
         val m = pipeline.Cep.detect(turns, streaming = false).toDF().cache()
         m.groupBy("pattern").count().orderBy("pattern").show(20, truncate = false)
         println(s"[cep] matches=${m.count()}")
       case "sessions" :: workDir :: rest =>
         val gap = rest.headOption.getOrElse("30 minutes")
-        val sink = new graft.sink.ExactlyOnceSink(spark, s"$workDir/out")
-        val turns = pipeline.Windows.turnsFromEvents(sink.readCommitted("events").get)
+        val turns = pipeline.Windows.turnsFromEvents(committedEvents(spark, workDir))
         val s = pipeline.Windows.session(turns, gap).cache()
         println(s"[sessions] sessions=${s.count()} convs=${s.select("conv_id").distinct().count()}")
       case "tooljoin" :: workDir :: Nil =>
-        val sink = new graft.sink.ExactlyOnceSink(spark, s"$workDir/out")
-        val turns = pipeline.Windows.turnsFromEvents(sink.readCommitted("events").get)
+        val turns = pipeline.Windows.turnsFromEvents(committedEvents(spark, workDir))
         val j = pipeline.Joins.toolCallResponse(turns).cache()
         println(s"[tooljoin] pairs=${j.count()} avg_latency_ms=${j.agg(avg("latency_ms")).first().getDouble(0)}")
       case "export" :: workDir :: fmt :: dest :: rest =>
@@ -300,7 +318,11 @@ object Main {
       case other =>
         System.err.println(s"unknown args: ${other.mkString(" ")}\n" +
           "usage: gen <tableDir> [numConvs] [avgTurns] [zipf] | run <tableDir> <workDir> [mft] | " +
-          "materialize <workDir> | lineage <workDir> | monitor <workDir> | diff <workDir> <from> <to> | " +
+          "pipeline key=value... | materialize <workDir> [asOfBatch] | cep <workDir> | " +
+          "sessions <workDir> [gap] | tooljoin <workDir> | " +
+          "export <workDir> jsonl|avro|dlq|schema <dest> [compression] | " +
+          "lineage <workDir> | monitor <workDir> | diff <workDir> <from> <to> | " +
+          "compact <workDir> [upToBatch] | savepoint <workDir> <destDir> | " +
           "ingest <docsDir> <workDir> [minQuality] [knownDir] | " +
           "view <changesDir> <workDir> [watermark] [nBuckets] | " +
           "table <changesDir> <workDir> [watermark] [nBuckets] | " +

@@ -16,11 +16,6 @@ final case class AppConfig(
     maxFilesPerTrigger: Int = 48,
     tableDir: String = "",
     workDir: String = "",
-    sessionGap: String = "30 minutes",
-    joinHorizon: String = "10 minutes",
-    watermark: String = "30 seconds",
-    exportFormat: String = "parquet",
-    exportCompression: String = "none",
     latencyAlertMs: Long = 10000L,
     tables: Seq[String] = Nil,
     restartAttempts: Int = 3,
@@ -92,9 +87,9 @@ final case class AppConfig(
       }
     }
   }
-  /** ≙ reference AppConfig.validateConfiguration (AppConfig.scala:259-273)
-    * + the format/compression whitelist of
-    * validation/EnvironmentValidator.scala:110-119.
+  /** ≙ reference AppConfig.validateConfiguration (AppConfig.scala:259-273).
+    * The format/compression whitelist is `Export.validateFormat`, checked
+    * where an export runs.
     */
   def validate(): Either[String, AppConfig] = {
     if (!AppConfig.Envs.contains(env)) Left(s"unknown env '$env' (${AppConfig.Envs.mkString("/")})")
@@ -103,12 +98,6 @@ final case class AppConfig(
     else if (parallelism < 1) Left("parallelism must be >= 1")
     else if (checkpointIntervalSec < 1) Left("checkpoint interval must be >= 1s")
     else if (maxFilesPerTrigger < 1) Left("maxFilesPerTrigger must be >= 1")
-    else if (!graft.sink.Export.Formats.contains(exportFormat))
-      Left(s"unsupported output format '$exportFormat' " +
-        s"(one of ${graft.sink.Export.Formats.mkString("/")})")
-    else if (!graft.sink.Export.Compressions.contains(exportCompression))
-      Left(s"unsupported compression '$exportCompression' " +
-        s"(one of ${graft.sink.Export.Compressions.mkString("/")})")
     else if (latencyAlertMs < 1)
       Left(s"latencyAlertMs must be >= 1 (got $latencyAlertMs)")
     else if (rollingIntervalMs > 0 && rollingIntervalMs < 1000)
@@ -205,11 +194,6 @@ object AppConfig {
       maxFilesPerTrigger = get("maxFilesPerTrigger").map(_.toInt).getOrElse(48),
       tableDir = get("tableDir").getOrElse(""),
       workDir = get("workDir").getOrElse(""),
-      sessionGap = get("sessionGap").getOrElse("30 minutes"),
-      joinHorizon = get("joinHorizon").getOrElse("10 minutes"),
-      watermark = get("watermark").getOrElse("30 seconds"),
-      exportFormat = get("exportFormat").getOrElse("parquet"),
-      exportCompression = get("exportCompression").getOrElse("none"),
       latencyAlertMs = get("latencyAlertMs").map(_.toLong).getOrElse(10000L),
       tables = get("tables").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil),
       restartAttempts = get("restartAttempts").map(_.toInt).getOrElse(defRestarts),

@@ -1,25 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for deterministic embedding construction and
-  * LSH banding — the Spark-first replacement for the r1 all-pairs
-  * embedding-cosine join (VERDICT.md "What's wrong" #2).
+/** Deterministic embedding construction and LSH banding — the Spark-first
+  * replacement for the r1 all-pairs embedding-cosine join (VERDICT.md
+  * "What's wrong" #2) — plus the text kernels of the dedup and quality
+  * operators.
   *
   * Everything here is an exact, engine-independent function of its input
   * (md5-derived dims / signs / hyperplanes, integer arithmetic only), so a
   * DuckDB oracle reproduces each step bit-for-bit — approximation lives in
   * WHICH candidate pairs are generated, never in any computed value.
   *
-  * All three expressions implement `doGenCode` by delegating to the static
-  * helpers in [[HashingKernels]], keeping whole-stage codegen unbroken.
+  * SQL reaches these static methods through [[GraftFunctions]], whose
+  * names build Spark `StaticInvoke` expressions: whole-stage codegen calls
+  * the method inline.
   */
 object HashingKernels {
 
@@ -551,305 +552,94 @@ object HashingKernels {
   }
 }
 
-/** hash_embed(text, dims, n): deterministic hashed-n-gram signed count
-  * vector (array<long>).
-  */
-case class HashEmbed(child: Expression, dims: Int, n: Int)
-    extends UnaryExpression {
-  require(dims > 0 && n > 0, "hash_embed: dims and n must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hash_embed"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.embedArray(input.asInstanceOf[UTF8String], dims, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.embedArray($c, $dims, $n);")
-  override protected def withNewChildInternal(newChild: Expression): HashEmbed =
-    copy(child = newChild)
-}
 
-/** lsh_band_keys(vec, bands, bitsPerBand): array<long> of band keys over
-  * deterministic ±1 hyperplanes.
-  */
-case class LshBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
-    extends UnaryExpression {
-  require(bands > 0 && bitsPerBand > 0 && bitsPerBand < 63, "lsh_band_keys: bad banding")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.bandKeys(input.asInstanceOf[ArrayData], bands, bitsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.bandKeys($c, $bands, $bitsPerBand);")
-  override protected def withNewChildInternal(newChild: Expression): LshBandKeys =
-    copy(child = newChild)
-}
-
-/** word_ngrams(text, n): distinct word n-grams as array<string>. */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, "word_ngrams: n must be positive")
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "word_ngrams"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.wordNgrams(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.wordNgrams($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
-}
-
-/** word_ngrams_all(text, n): every n-gram window in order (index = token
-  * offset) — positional, frequency-preserving twin of word_ngrams.
-  */
-case class WordNgramsAll(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, "word_ngrams_all: n must be positive")
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "word_ngrams_all"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.wordNgramsAll(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.wordNgramsAll($c, $n);")
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsAll =
-    copy(child = newChild)
-}
-
-/** winnow_fps(text, k, w): distinct robust-winnowing selections as
-  * array<struct<pos:int, fp:bigint>> (see HashingKernels.winnowFps).
-  */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  require(k >= 1 && w >= 1, "winnow_fps: k and w must be >= 1")
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pos", IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("fp", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "winnow_fps"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.winnowFps(input.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.winnowFps($c, $k, $w);")
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-}
-
-/** span_fps(text, k): per-window 60-bit md5 span fingerprints as
-  * array<long> (index = token offset) — see HashingKernels.spanFps.
-  */
-case class SpanFps(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, "span_fps: k must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "span_fps"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.spanFps(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.spanFps($c, $k);")
-  override protected def withNewChildInternal(newChild: Expression): SpanFps =
-    copy(child = newChild)
-}
-
-/** remove_spans(text, starts, k): the document with every k-token window
-  * starting at `starts` excised — see HashingKernels.removeSpans.
-  */
-case class RemoveSpans(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  require(k >= 1, "remove_spans: k must be >= 1")
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def prettyName: String = "remove_spans"
-  override protected def nullSafeEval(text: Any, starts: Any): Any =
-    HashingKernels.removeSpans(text.asInstanceOf[UTF8String],
-      starts.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) =>
-      s"${ev.value} = graft.functions.HashingKernels.removeSpans($t, $s, $k);")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RemoveSpans = copy(left = newLeft, right = newRight)
-}
-
-/** minhash_band_keys(text, n, bands, rowsPerBand): per-doc MinHash LSH band
-  * keys as array<long> (index = band) — see HashingKernels.minhashBandKeys.
-  */
-case class MinhashBandKeys(child: Expression, n: Int, bands: Int,
-    rowsPerBand: Int) extends UnaryExpression {
-  require(n >= 1 && bands >= 1 && rowsPerBand >= 1 &&
-    bands.toLong * rowsPerBand <= HashingKernels.MaxMinhashRows, "minhash_band_keys: bad params")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.minhashBandKeys(input.asInstanceOf[UTF8String], n, bands, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.minhashBandKeys($c, $n, $bands, $rowsPerBand);")
-  override protected def withNewChildInternal(newChild: Expression): MinhashBandKeys =
-    copy(child = newChild)
-}
-
-/** quality_score(text): one-pass composite quality score (see
-  * HashingKernels.qualityScore).
-  */
-case class QualityScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "quality_score"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.qualityScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.qualityScore($c);")
-  override protected def withNewChildInternal(newChild: Expression): QualityScore =
-    copy(child = newChild)
-}
-
-/** simhash60(text): one-pass 60-bit SimHash signature (narrow, codegen'd). */
-case class Simhash60(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash60"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.simhash60(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.simhash60($c);")
-  override protected def withNewChildInternal(newChild: Expression): Simhash60 =
-    copy(child = newChild)
-}
-
-/** top_bigram_frac(text): most-frequent-bigram occurrence fraction. */
-case class TopBigramFrac(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "top_bigram_frac"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.topBigramFrac(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.topBigramFrac($c);")
-  override protected def withNewChildInternal(newChild: Expression): TopBigramFrac =
-    copy(child = newChild)
-}
-
-/** fingerprint31(text): one-pass rolling Mersenne-ring fingerprint. */
-case class Fingerprint31(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fingerprint31"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.fingerprint31(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.fingerprint31($c);")
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint31 =
-    copy(child = newChild)
-}
-
-/** lsh_band_keys_fp(vec, bands, bitsPerBand): sign-LSH band keys for a
-  * float/double embedding column.
-  */
-case class LshBandKeysFp(child: Expression, isFloat: Boolean, bands: Int,
-    bitsPerBand: Int) extends UnaryExpression {
-  require(bands > 0 && bitsPerBand > 0 && bitsPerBand < 63, "lsh_band_keys_fp: bad banding")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys_fp"
-  override protected def nullSafeEval(input: Any): Any =
-    HashingKernels.bandKeysFp(input.asInstanceOf[ArrayData], isFloat, bands, bitsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingKernels.bandKeysFp($c, $isFloat, $bands, $bitsPerBand);")
-  override protected def withNewChildInternal(newChild: Expression): LshBandKeysFp =
-    copy(child = newChild)
-}
-
-/** dot_i64(a, b): exact integer dot product of two array<long> columns —
-  * the codegen'd verify kernel (a higher-order-function fold is ~30µs/pair
-  * interpreted; this is ~0.1µs).
-  */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dot_i64"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashingKernels.dotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.HashingKernels.dotLong($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Function registration: the SparkSessionExtensions path (set
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) plus an
-  * idempotent imperative fallback for sessions created without it.
+/** The SQL names of the kernels. Each name builds one `StaticInvoke` of a
+  * [[HashingKernels]] or [[VectorKernels]] method, so whole-stage codegen
+  * calls the method inline and the interpreted path calls it by
+  * reflection. Int parameters must be int literals; their bounds are
+  * checked here, when the function resolves, before any job runs.
   */
 object GraftFunctions {
 
   private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
+    case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
   }
 
-  val registry: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("hash_embed"),
-      new ExpressionInfo(classOf[HashEmbed].getName, "hash_embed"),
-      (args: Seq[Expression]) =>
-        HashEmbed(args.head, intLit(args(1), "dims"), intLit(args(2), "n"))),
-    (new FunctionIdentifier("lsh_band_keys"),
-      new ExpressionInfo(classOf[LshBandKeys].getName, "lsh_band_keys"),
-      (args: Seq[Expression]) =>
-        LshBandKeys(args.head, intLit(args(1), "bands"), intLit(args(2), "bitsPerBand"))),
-    (new FunctionIdentifier("dot_i64"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_i64"),
-      (args: Seq[Expression]) => DotLong(args.head, args(1))),
-    (new FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[VecDot].getName, "dot_f64"),
-      (args: Seq[Expression]) => VecDot(args.head, args(1))),
-    (new FunctionIdentifier("norm_f64"),
-      new ExpressionInfo(classOf[VecNorm].getName, "norm_f64"),
-      (args: Seq[Expression]) => VecNorm(args.head)),
-    (new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (args: Seq[Expression]) => WordNgrams(args.head, intLit(args(1), "n"))),
-    (new FunctionIdentifier("word_ngrams_all"),
-      new ExpressionInfo(classOf[WordNgramsAll].getName, "word_ngrams_all"),
-      (args: Seq[Expression]) => WordNgramsAll(args.head, intLit(args(1), "n"))),
-    (new FunctionIdentifier("quality_score"),
-      new ExpressionInfo(classOf[QualityScore].getName, "quality_score"),
-      (args: Seq[Expression]) => QualityScore(args.head)),
-    (new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (args: Seq[Expression]) =>
-        WinnowFps(args.head, intLit(args(1), "k"), intLit(args(2), "w"))),
-    (new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      (args: Seq[Expression]) => Simhash60(args.head)),
-    (new FunctionIdentifier("fingerprint31"),
-      new ExpressionInfo(classOf[Fingerprint31].getName, "fingerprint31"),
-      (args: Seq[Expression]) => Fingerprint31(args.head)),
-    (new FunctionIdentifier("top_bigram_frac"),
-      new ExpressionInfo(classOf[TopBigramFrac].getName, "top_bigram_frac"),
-      (args: Seq[Expression]) => TopBigramFrac(args.head)),
-    (new FunctionIdentifier("span_fps"),
-      new ExpressionInfo(classOf[SpanFps].getName, "span_fps"),
-      (args: Seq[Expression]) => SpanFps(args.head, intLit(args(1), "k"))),
-    (new FunctionIdentifier("minhash_band_keys"),
-      new ExpressionInfo(classOf[MinhashBandKeys].getName, "minhash_band_keys"),
-      (args: Seq[Expression]) => MinhashBandKeys(args.head, intLit(args(1), "n"),
-        intLit(args(2), "bands"), intLit(args(3), "rowsPerBand"))),
-    (new FunctionIdentifier("remove_spans"),
-      new ExpressionInfo(classOf[RemoveSpans].getName, "remove_spans"),
-      (args: Seq[Expression]) => RemoveSpans(args.head, args(1), intLit(args(2), "k")))
+  /** `cls.method(args…)`: null when any argument is null, otherwise the
+    * method's result, which is never null; `dt` is its Catalyst type.
+    */
+  private[functions] def kernel(cls: Class[_], method: String, dt: DataType,
+      args: Expression*): Expression =
+    StaticInvoke(cls, dt, method, args, propagateNull = true, returnNullable = false)
+
+  private def hashing(method: String, dt: DataType, args: Expression*): Expression =
+    kernel(HashingKernels.getClass, method, dt, args: _*)
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
+  private val Selections = ArrayType(StructType(Seq(
+    StructField("pos", IntegerType, nullable = false),
+    StructField("fp", LongType, nullable = false))), containsNull = false)
+
+  private[functions] def requireBanding(what: String, bands: Int, bitsPerBand: Int): Unit =
+    require(bands > 0 && bitsPerBand > 0 && bitsPerBand < 63, s"$what: bad banding")
+
+  private def ngrams(name: String, method: String)(a: Seq[Expression]): Expression = {
+    require(intLit(a(1), "n") > 0, s"$name: n must be positive")
+    hashing(method, Strings, a(0), a(1))
+  }
+
+  private def elemKind(e: Expression, what: String): Expression =
+    Literal(VectorKernels.elemKind(e.dataType, what))
+
+  /** One row per SQL name: its builder over the resolved arguments. */
+  val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "hash_embed" -> { a =>
+      require(intLit(a(1), "dims") > 0 && intLit(a(2), "n") > 0,
+        "hash_embed: dims and n must be positive")
+      hashing("embedArray", Longs, a(0), a(1), a(2))
+    },
+    "lsh_band_keys" -> { a =>
+      requireBanding("lsh_band_keys", intLit(a(1), "bands"), intLit(a(2), "bitsPerBand"))
+      hashing("bandKeys", Longs, a(0), a(1), a(2))
+    },
+    "dot_i64" -> (a => hashing("dotLong", LongType, a(0), a(1))),
+    "dot_f64" -> (a => kernel(VectorKernels.getClass, "dotD", DoubleType,
+      a(0), elemKind(a(0), "dot_f64"), a(1), elemKind(a(1), "dot_f64"))),
+    "norm_f64" -> (a => kernel(VectorKernels.getClass, "normD", DoubleType,
+      a(0), elemKind(a(0), "norm_f64"))),
+    "word_ngrams" -> ngrams("word_ngrams", "wordNgrams"),
+    "word_ngrams_all" -> ngrams("word_ngrams_all", "wordNgramsAll"),
+    "quality_score" -> (a => hashing("qualityScore", DoubleType, a(0))),
+    "winnow_fps" -> { a =>
+      require(intLit(a(1), "k") >= 1 && intLit(a(2), "w") >= 1,
+        "winnow_fps: k and w must be >= 1")
+      hashing("winnowFps", Selections, a(0), a(1), a(2))
+    },
+    "simhash60" -> (a => hashing("simhash60", LongType, a(0))),
+    "fingerprint31" -> (a => hashing("fingerprint31", LongType, a(0))),
+    "top_bigram_frac" -> (a => hashing("topBigramFrac", DoubleType, a(0))),
+    "span_fps" -> { a =>
+      require(intLit(a(1), "k") >= 1, "span_fps: k must be >= 1")
+      hashing("spanFps", Longs, a(0), a(1))
+    },
+    "minhash_band_keys" -> { a =>
+      val (n, bands, rows) = (intLit(a(1), "n"), intLit(a(2), "bands"), intLit(a(3), "rowsPerBand"))
+      require(n >= 1 && bands >= 1 && rows >= 1 &&
+        bands.toLong * rows <= HashingKernels.MaxMinhashRows, "minhash_band_keys: bad params")
+      hashing("minhashBandKeys", Longs, a(0), a(1), a(2), a(3))
+    },
+    "remove_spans" -> { a =>
+      require(intLit(a(2), "k") >= 1, "remove_spans: k must be >= 1")
+      hashing("removeSpans", StringType, a(0), a(1), a(2))
+    }
   )
 
-  /** Imperative registration for an existing session (idempotent). */
+  /** Registers every kernel name on `spark` (idempotent). */
   def ensureRegistered(spark: SparkSession): Unit =
-    registry.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.registry.foreach { case (id, info, builder) =>
-      ext.injectFunction((id, info, builder))
+    registry.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.registerFunction(new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[StaticInvoke].getName, name), build)
     }
 }

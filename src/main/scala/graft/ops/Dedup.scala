@@ -265,7 +265,7 @@ object Dedup {
     * rather than rows-only.
     */
   def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    // one narrow codegen'd pass per doc (functions.Simhash60) — the former
+    // one narrow codegen'd pass per doc (HashingKernels.simhash60) — the former
     // explode + 60-conditional-sum groupBy shuffled one row per token
     // (OpsSpec pins kernel == expression-formula equality)
     docs.select(col(idCol).as("id"),
@@ -818,7 +818,7 @@ object Dedup {
   }
 
   /** Deterministic hashed-n-gram document embeddings: dims-long signed
-    * integer count vectors (see functions.HashEmbed), plus the exact
+    * integer count vectors (see HashingKernels.embed), plus the exact
     * integer squared norm. Narrow map — no explode, no shuffle.
     */
   def hashedEmbeddings(docs: DataFrame, dims: Int = 256, n: Int = 3,

@@ -58,7 +58,7 @@ object TextAnalysis {
     * mean token length, lexical diversity — each capped and equally
     * weighted, rounded for cross-engine stability.
     *
-    * r7: one-pass codegen'd kernel (functions.QualityScore) replacing the
+    * r7: one-pass codegen'd kernel (HashingKernels.qualityScore) replacing the
     * interpreted builtin-HOF tree (aggregate/filter/array_distinct per
     * token) — bit-identical by construction (the kernel replicates the
     * expression's float-op order and Spark Round semantics; OpsSpec pins
@@ -101,7 +101,7 @@ object TextAnalysis {
     * bit-reproducible in any engine (DuckDB oracle mirrors it exactly).
     */
   def fingerprint(text: Column): Column =
-    // one-pass native kernel (functions.Fingerprint31); the builtin-HOF
+    // one-pass native kernel (HashingKernels.fingerprint31); the builtin-HOF
     // fold it replaced interpreted the md5/conv tree per token (OpsSpec
     // pins kernel == expression-formula equality)
     call_function("fingerprint31", text)

@@ -579,4 +579,12 @@ class CdcPipelineSpec extends SparkSpec {
     assert(stamps.toSeq == Seq(new java.sql.Timestamp(batchTs)),
       s"batch $n must carry its offset-log timestamp $batchTs: ${stamps.mkString(",")}")
   }
+
+  test("the event verbs and materialize name the workDir when nothing is committed") {
+    val work = tmpDir("nocommits")
+    val e = intercept[IllegalStateException](Main.committedEvents(spark, work))
+    assert(e.getMessage == s"no committed batches in $work/out")
+    val m = intercept[IllegalStateException](CdcPipeline.materialize(spark, s"$work/out"))
+    assert(m.getMessage == e.getMessage)
+  }
 }

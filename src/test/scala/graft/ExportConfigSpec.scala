@@ -80,13 +80,13 @@ class ExportConfigSpec extends SparkSpec {
   test("config: properties-file layer sits under sysprops/CLI, {env} beats application") {
     val dir = tmpDir("cfg")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "application.properties"),
-      "parallelism=5\nsessionGap=45 minutes\nworkDir=${HOME}/w\n")
+      "parallelism=5\nmaxFilesPerTrigger=12\nworkDir=${HOME}/w\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "prod.properties"),
       "parallelism=7\n")
     val getenv: String => Option[String] = s => Some("/home/x").filter(_ => s == "HOME")
     // {env}.properties overrides application.properties
     val c = AppConfig.load(Seq("env=prod", s"configDir=$dir"), Map.empty, getenv).toOption.get
-    assert(c.parallelism == 7 && c.sessionGap == "45 minutes")
+    assert(c.parallelism == 7 && c.maxFilesPerTrigger == 12)
     // ${VAR} substitution applies inside files
     assert(c.workDir == "/home/x/w")
     // CLI beats the file layer
@@ -100,9 +100,6 @@ class ExportConfigSpec extends SparkSpec {
   }
 
   test("config/export: format and compression whitelists reject bad values") {
-    assert(AppConfig.load(Seq("exportCompression=zip")).isLeft)
-    assert(AppConfig.load(Seq("exportFormat=xml")).isLeft)
-    assert(AppConfig.load(Seq("exportFormat=avro", "exportCompression=snappy")).isRight)
     intercept[IllegalArgumentException](Export.validateFormat("json", "zip"))
     intercept[IllegalArgumentException](Export.validateFormat("avro", "lz4"))
     intercept[IllegalArgumentException](
@@ -361,7 +358,7 @@ class ExportConfigSpec extends SparkSpec {
   test("config: env declared in application.properties loads its {env}.properties layer") {
     val dir = tmpDir("cfgenv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "application.properties"),
-      "env=prod\nsessionGap=45 minutes\n")
+      "env=prod\nmaxFilesPerTrigger=12\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "prod.properties"),
       "parallelism=7\n")
     val c = AppConfig.load(Seq(s"configDir=$dir"), Map.empty, _ => None).toOption.get

@@ -450,8 +450,31 @@ class OpsSpec extends SparkSpec {
     val maxRows = graft.functions.HashingKernels.MaxMinhashRows
     intercept[IllegalArgumentException](graft.functions.HashingKernels.minhashBandKeys(
       org.apache.spark.unsafe.types.UTF8String.fromString("a b c d"), 3, maxRows, 2))
-    intercept[Exception](docs.select(call_function("minhash_band_keys", col("text"), lit(3),
-      lit(maxRows + 1), lit(1))).collect())
+    // every parameterized kernel rejects an out-of-range literal when
+    // `select` builds the column, before any job runs
+    import spark.implicits._
+    val one = Seq(("a b c d", Array(1L, 2L), Array(0.5f, 1f))).toDF("text", "lv", "fv")
+    val bad: Seq[(String, () => org.apache.spark.sql.Column)] = Seq(
+      "minhash_band_keys" -> (() => call_function("minhash_band_keys", col("text"), lit(3),
+        lit(maxRows + 1), lit(1))),
+      "hash_embed" -> (() => call_function("hash_embed", col("text"), lit(0), lit(3))),
+      "lsh_band_keys" -> (() => call_function("lsh_band_keys", col("lv"), lit(4), lit(63))),
+      "lsh_band_keys_fp" -> (() =>
+        graft.functions.VectorFunctions.lshBandKeysFp(col("fv"), isFloat = true, 4, 63)),
+      "winnow_fps" -> (() => call_function("winnow_fps", col("text"), lit(0), lit(4))),
+      "span_fps" -> (() => call_function("span_fps", col("text"), lit(0))),
+      "remove_spans" -> (() =>
+        call_function("remove_spans", col("text"), array(lit(0)), lit(0))),
+      "word_ngrams" -> (() => call_function("word_ngrams", col("text"), lit(0))),
+      "word_ngrams_all" -> (() => call_function("word_ngrams_all", col("text"), lit(0))),
+      "dot_f64" -> (() => call_function("dot_f64", col("text"), col("fv"))))
+    val sc = spark.sparkContext
+    sc.setJobGroup("kernel-param-checks", "parameter checks")
+    try bad.foreach { case (name, build) =>
+      val e = intercept[IllegalArgumentException](one.select(build()))
+      assert(e.getMessage.contains(name), s"$name: ${e.getMessage}")
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("kernel-param-checks").isEmpty)
     // md5fp60's digest-bytes fast path == the hex-string parse it replaced
     val rng = new scala.util.Random(7)
     val strs = Seq("", "a", "hello world", "Δ unicode ✓ λ", "the a of and to") ++
@@ -1285,5 +1308,100 @@ class OpsSpec extends SparkSpec {
     }
     // one row fewer is exactly the bound, which is allowed
     VectorFunctions.nearestCentroid(v, big.init, isFloat = true)
+  }
+
+  test("every kernel: codegen == interpreted, null in → null out, declared output types") {
+    import graft.functions.{VectorFunctions, VectorKernels}
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.types._
+    val cents = Array(Array(1.0, 0, 0, 0), Array(0, 1.0, 0, 0), Array(0, 0, 0.6, 0.8))
+    val strata = new VectorKernels.StrataCentroids(Array("a", "b"),
+      Array(Array(1L, 0, 2, 0, 0, 0, 0, 0), Array(0L, -1, 0, 1, 0, 0, 0, 1)),
+      Array(Array(true, false, true, false, false, false, false, false),
+        Array(false, true, false, true, false, false, false, true)),
+      Array(math.sqrt(5), math.sqrt(3)))
+    def f(name: String, args: Column*): Column = call_function(name, args: _*)
+    val (t, lv, dv, fv) = (col("text"), col("lv"), col("dv"), col("fv"))
+    val longs = ArrayType(LongType, containsNull = false)
+    // the types and the input-nullability rule the former hand-written
+    // expression classes declared
+    val cases: Seq[(String, Column, DataType)] = Seq(
+      ("hash_embed", f("hash_embed", t, lit(16), lit(2)), longs),
+      ("lsh_band_keys", f("lsh_band_keys", lv, lit(4), lit(8)), longs),
+      ("dot_i64", f("dot_i64", lv, lv), LongType),
+      ("dot_f64", f("dot_f64", dv, fv), DoubleType),
+      ("norm_f64", f("norm_f64", dv), DoubleType),
+      ("word_ngrams", f("word_ngrams", t, lit(2)), ArrayType(StringType, containsNull = false)),
+      ("word_ngrams_all", f("word_ngrams_all", t, lit(2)),
+        ArrayType(StringType, containsNull = false)),
+      ("quality_score", f("quality_score", t), DoubleType),
+      ("winnow_fps", f("winnow_fps", t, lit(2), lit(2)), ArrayType(StructType(Seq(
+        StructField("pos", IntegerType, nullable = false),
+        StructField("fp", LongType, nullable = false))), containsNull = false)),
+      ("simhash60", f("simhash60", t), LongType),
+      ("fingerprint31", f("fingerprint31", t), LongType),
+      ("top_bigram_frac", f("top_bigram_frac", t), DoubleType),
+      ("span_fps", f("span_fps", t, lit(2)), longs),
+      ("minhash_band_keys", f("minhash_band_keys", t, lit(2), lit(4), lit(2)), longs),
+      ("remove_spans", f("remove_spans", t, col("starts"), lit(2)), StringType),
+      ("nearest_centroid", VectorFunctions.nearestCentroid(fv, cents, isFloat = true),
+        StructType(Seq(StructField("cid", IntegerType, nullable = false),
+          StructField("dist", DoubleType, nullable = false)))),
+      ("centroid_dists", VectorFunctions.centroidDists(dv, cents, isFloat = false),
+        ArrayType(DoubleType, containsNull = false)),
+      ("centroid_argmax", VectorFunctions.centroidArgmax(lv, strata),
+        StructType(Seq(StructField("pred", StringType, nullable = true),
+          StructField("score", DoubleType, nullable = true)))),
+      ("lsh_band_keys_fp", VectorFunctions.lshBandKeysFp(fv, isFloat = true, 4, 8), longs))
+    assert(cases.size == graft.functions.GraftFunctions.registry.size + 4)
+    def schema(nullable: Boolean) = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("text", StringType, nullable),
+      StructField("lv", ArrayType(LongType, containsNull = false), nullable),
+      StructField("dv", ArrayType(DoubleType, containsNull = false), nullable),
+      StructField("fv", ArrayType(FloatType, containsNull = false), nullable),
+      StructField("starts", ArrayType(IntegerType, containsNull = false), nullable)))
+    val rows = Seq(
+      Row(1, "the quick brown fox jumps over the lazy dog the quick brown fox",
+        Seq(1L, -2L, 0L, 3L, 0L, 0L, 1L, -1L), Seq(0.5, -1.0, 2.0, 0.0),
+        Seq(1.5f, 0.25f, -3.0f, 1.0f), Seq(0, 5)),
+      Row(2, "a b", Seq.fill(8)(0L), Seq(1.0, 1.0, 1.0, 1.0), Seq(0f, 0f, 0f, 1f), Seq.empty[Int]))
+    val nullRow = Row(3, null, null, null, null, null)
+    val outs = cases.map { case (name, c, _) => c.as(name) }
+    // declared type and nullability, over non-nullable and nullable input
+    for (nullable <- Seq(false, true)) {
+      val in = spark.createDataFrame(
+        spark.sparkContext.parallelize(if (nullable) rows :+ nullRow else rows), schema(nullable))
+      val out = in.select(outs: _*).schema
+      cases.foreach { case (name, _, dt) =>
+        assert(out(name).dataType == dt, name)
+        assert(out(name).nullable == nullable, s"$name nullable over nullable=$nullable input")
+      }
+    }
+    // values: parquet input, so no optimizer rule evaluates the projection
+    // on the driver; codegen and the interpreted path must agree row for row
+    val dir = tmpDir("kernels")
+    spark.createDataFrame(spark.sparkContext.parallelize(rows :+ nullRow), schema(true))
+      .write.mode("overwrite").parquet(dir)
+    def run(mode: String, wholeStage: Boolean): Seq[Row] = {
+      val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), mode)
+      spark.conf.set(keys(1), wholeStage.toString)
+      try spark.read.parquet(dir).select(col("id") +: outs: _*).orderBy("id").collect().toSeq
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = run("CODEGEN_ONLY", wholeStage = true)
+    val interpreted = run("NO_CODEGEN", wholeStage = false)
+    assert(compiled.map(_.toString) == interpreted.map(_.toString))
+    assert(compiled.size == 3)
+    val Seq(r1, _, r3) = compiled
+    cases.map(_._1).foreach { name =>
+      assert(r3.isNullAt(r3.fieldIndex(name)), s"$name: null in, null out")
+      assert(!r1.isNullAt(r1.fieldIndex(name)), s"$name: non-null in, non-null out")
+    }
   }
 }

@@ -13,6 +13,16 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString()
 
+  /** Runs `df`, then whether an operator line of its final plan inside a
+    * `*(n)` whole-stage-codegen stage calls `call`. The kernels plan as
+    * `static_invoke(graft.functions.<Kernels>.<method>(…))`.
+    */
+  private def inCodegenStage(df: org.apache.spark.sql.DataFrame, call: String): Boolean = {
+    df.collect()
+    plan(df).linesIterator.exists(l =>
+      l.contains(call) && "\\*\\(\\d+\\) ".r.findFirstIn(l).isDefined)
+  }
+
   test("q2: filter is pushed to the parquet scan; schema pruned") {
     val p = plan(Queries.q2Filter(spark, sf))
     assert(p.contains("PushedFilters") &&
@@ -97,7 +107,8 @@ class PlanSpec extends SparkSpec {
     val p = plan(index)
     assert(!p.contains("Exchange") && !p.contains("Join"),
       "nearest_centroid must not shuffle:\n" + p.take(600))
-    assert(p.contains("nearest_centroid") || p.contains("*(1)"), p.take(300))
+    assert(inCodegenStage(index, "VectorKernels.assign("),
+      "nearest_centroid must run inside a codegen stage:\n" + plan(index).take(800))
   }
 
   test("q28: as-of join is one key shuffle + window — no range join, no nested loop") {
@@ -342,8 +353,9 @@ class PlanSpec extends SparkSpec {
     // r7: scoring is the one-pass centroid_argmax kernel over the cached
     // embedding projection — the former dim-join (×strata row fan-out) and
     // its window argmax are gone from the plan entirely
-    assert(p.contains("centroid_argmax"),
-      "scores must come from the narrow argmax kernel:\n" + p.take(800))
+    val q51 = Queries.q51CentroidClassify(spark, sf)
+    assert(inCodegenStage(q51, "VectorKernels.centroidArgmax("),
+      "scores must come from the narrow argmax kernel:\n" + plan(q51).take(1600))
     assert(!p.contains("row_number"),
       "no window argmax — the kernel decides per row:\n" + p.take(800))
     val bad = p.linesIterator.exists(l =>
